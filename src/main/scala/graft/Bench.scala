@@ -128,9 +128,6 @@ object Bench {
     val reps = sys.env.get("SPARK_GRAFT_REPS")
       .flatMap(_.toIntOption).filter(_ > 0).getOrElse(1)
     val errors = scala.collection.mutable.ArrayBuffer[String]()
-    // per-query record of durable-store artifact HITS: a near-zero
-    // timing whose index came warm from the cross-JVM store must say so
-    val hitByQuery = scala.collection.mutable.LinkedHashMap[String, Seq[String]]()
     // per-query streaming-lifecycle count (VERDICT r14 ask #4): each
     // lifecycle carries a Spark-fixed floor a long-lived deployment
     // pays once per query lifetime — the record splits each streaming
@@ -140,7 +137,6 @@ object Bench {
     graft.core.StreamMeter.ensure(spark)
     val lifecyclesByQuery = scala.collection.mutable.LinkedHashMap[String, Long]()
     val results = selected.map { case (name, fn) =>
-      val hitsBefore = graft.core.IndexCache.storeHits
       val lcBefore = graft.core.StreamMeter.lifecycles
       val times = (1 to reps).map { _ =>
         // Cold index builds (IndexCache) that fire inside this query are
@@ -165,8 +161,6 @@ object Bench {
         System.gc()
         dt
       }
-      val newHits = (graft.core.IndexCache.storeHits -- hitsBefore).toSeq.sorted
-      if (newHits.nonEmpty) hitByQuery(name) = newHits
       // lifecycles per REP (the timing is per-rep too)
       val lcDelta = (graft.core.StreamMeter.lifecycles - lcBefore) / reps
       if (lcDelta > 0) lifecyclesByQuery(name) = lcDelta
@@ -180,26 +174,12 @@ object Bench {
     val errJson = errors.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
     val fullQs = results.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
     // cold index builds, attributed to their artifact key instead of
-    // whichever query ran first (keys may contain no quotes by
-    // construction — artifact label + dir path)
+    // whichever query ran first
+    def esc(x: String) = x.replace("\\", "\\\\").replace("\"", "\\\"")
     val staging = graft.core.IndexCache.stagingLog.toSeq.sortBy(_._1)
     val stagingJson = staging
-      .map { case (k, v) => "\"" + k.replace("\\", "\\\\").replace("\"", "\\\"") + "\":" + v }
-      .mkString("{", ",", "}")
+      .map { case (k, v) => "\"" + esc(k) + "\":" + v }.mkString("{", ",", "}")
     val stagingTotal = staging.map(_._2).sum
-    // Artifacts served from the cross-JVM durable store (hit, not
-    // built) — without this a warm run's index_staging_sec of 0.0 and
-    // near-zero per-key times are indistinguishable from "free". Keyed
-    // by the first query that triggered each hit; hits fired during
-    // warmup land under "_warmup".
-    def esc(x: String) = x.replace("\\", "\\\\").replace("\"", "\\\"")
-    val attributed = hitByQuery.values.flatten.toSet
-    val warmupHits = (graft.core.IndexCache.storeHits -- attributed).toSeq.sorted
-    val allHits = (if (warmupHits.nonEmpty) Seq("_warmup" -> warmupHits) else Nil) ++
-      hitByQuery.toSeq
-    val storeHitsJson = allHits.map { case (q, ks) =>
-      "\"" + esc(q) + "\":" + ks.map(k => "\"" + esc(k) + "\"").mkString("[", ",", "]")
-    }.mkString("{", ",", "}")
     // streaming lifecycle/operator split: floor = lifecycles × the
     // StreamCostProbe-measured per-lifecycle machinery cost (0.5 s —
     // the conservative LOWER end of the measured 0.52–0.96 s range, so
@@ -213,7 +193,7 @@ object Bench {
           ",\"lifecycle_floor\":" + fmt(floor) +
           ",\"operator_sec\":" + fmt(math.max(0.0, t - floor)) + "}"
     }.mkString("{", ",", "}")
-    val full = s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,"load":"$load","errors":$errJson,"index_staging_sec":$stagingTotal,"index_staging":$stagingJson,"index_store_hits":$storeHitsJson,"stream_split":$streamSplitJson,"queries":$fullQs,"sf":"$sfDir"}"""
+    val full = s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,"load":"$load","errors":$errJson,"index_staging_sec":$stagingTotal,"total_with_staging":${total + stagingTotal},"index_staging":$stagingJson,"stream_split":$streamSplitJson,"queries":$fullQs,"sf":"$sfDir"}"""
     // SPARK_GRAFT_ONLY runs write to a sidecar: the committed
     // bench_full.json is the full-409-key driver-protocol record and a
     // targeted subset run must never clobber it (r15's snapshot committed
@@ -224,9 +204,11 @@ object Bench {
         (full + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     } catch { case t: Throwable => System.err.println(s"[bench] $fullPath write failed: $t") }
     val oneLine = render(results, total, sfDir, errors.toSeq, load, stagingTotal)
-    spark.stop()
     // Emit the driver-contract line LAST, after spark.stop(), so no
-    // shutdown logging can land between it and process exit.
+    // shutdown logging can land between it and process exit — and print
+    // it even when stop() throws.
+    try spark.stop()
+    catch { case t: Throwable => System.err.println(s"[bench] spark.stop() failed: $t") }
     println(oneLine)
     System.out.flush()
   }

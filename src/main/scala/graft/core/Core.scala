@@ -31,8 +31,8 @@ object Tables {
     * 400+ query functions each re-open their tables per invocation, so
     * a full bench pays that metadata cost hundreds of times over for
     * corpus dirs that are immutable for the life of the run (the same
-    * immutability contract [[IndexCache]]'s fingerprint memo already
-    * relies on). Memoizing the DataFrame reuses the resolved relation —
+    * immutability contract [[IndexCache]]'s per-JVM memo relies on).
+    * Memoizing the DataFrame reuses the resolved relation —
     * file listing + schema — exactly like registering the tables in a
     * catalog once (the guide's filesourcePartitionFileCacheSize point);
     * NO row data is cached, every query still scans parquet. Scratch
@@ -258,9 +258,8 @@ object Ndjson {
     */
   private val GzStageShards = 8
 
-  def stageGz(spark: SparkSession, dir: String, label: String,
-      durable: Boolean = true): String =
-    IndexCache.dir(s"$label|$dir", durable = durable) {
+  def stageGz(spark: SparkSession, dir: String, label: String): String =
+    IndexCache.dir(s"$label|$dir") {
       val out = TmpDirs.dir(label)
       Tables.events(spark, dir)
         .repartition(GzStageShards, col("event_id"))
@@ -364,17 +363,12 @@ object TmpDirs {
     p.toString
   }
 
-  /** Best-effort recursive delete for non-root scratch (the
-    * IndexCache's losing concurrent store write).
-    */
-  private[core] def rmrfPath(p: java.nio.file.Path): Unit = rmrf(p)
-
   /** Recreate `src`'s tree under `dst` via HARDLINKS (fall back to a
     * byte copy per file when the filesystems differ or linking is
     * unsupported). Parquet part files are immutable once written, so a
     * linked base is safe to share; the use case is copy-on-first-use
     * staging (index_append): a fresh writable view of a pristine
-    * store artifact per invocation without re-writing its bytes.
+    * [[IndexCache]] artifact per invocation without re-writing its bytes.
     */
   private[graft] def linkOrCopyTree(src: String, dst: String): Unit = {
     import java.nio.file._
@@ -448,263 +442,28 @@ object Mat {
     else apply(s, df, name)
 }
 
-/** Per-JVM cache of DERIVED INDEX ARTIFACTS — materialized relations
-  * that are pure deterministic functions of an (immutable) archive dir:
-  * LSH signature tables, IVF quantized components and trained
-  * assignments. Production economics are build-once/query-many: an
-  * index is built when the corpus lands and amortized over every query
-  * after, so recomputing it inside each of the several operators that
-  * share it (the ANN family + its recall gate) mis-charges the build
-  * N×. The FIRST caller builds and pays (the cost stays visible in
-  * that operator's bench timing); later callers read the materialized
-  * parquet. Keys embed the source dir (plus any index parameters), so
-  * distinct corpora — including per-test staged dirs — never collide;
-  * storage lives in [[TmpDirs]] and is reaped at JVM exit. Results are
-  * bit-identical with or without a hit (the build is deterministic),
+/** Per-JVM build-once memo of DERIVED INDEX ARTIFACTS — materialized
+  * relations and staged archive layouts that are pure deterministic
+  * functions of an (immutable) archive dir: LSH signature tables, IVF
+  * quantized components and trained assignments, gz/KPL/date-partitioned
+  * encodes. Production economics are build-once/query-many: an index is
+  * built when the corpus lands and amortized over every query after, so
+  * recomputing it inside each of the several operators that share it
+  * (the ANN family + its recall gate) mis-charges the build N×. The
+  * FIRST caller in a JVM builds and pays — the cost is ledgered in
+  * [[stagingLog]] — and later callers reuse the path. Keys embed the
+  * source dir (plus any index parameters), so distinct corpora —
+  * including per-test staged dirs — never collide. Storage lives in
+  * [[TmpDirs]] scratch and is reaped at JVM exit; nothing is reused
+  * across runs, so every run's staging cost is a cold build. Results
+  * are bit-identical with or without a hit (the build is deterministic),
   * which is why Verify's hash gate is unaffected.
   */
 object IndexCache {
   private val paths = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
-  /** CROSS-JVM durable layer under the (per-JVM) in-memory map: index
-    * artifacts whose key names an IMMUTABLE corpus directory persist
-    * to a content-keyed store under the system tmpdir and RELOAD in
-    * later JVMs instead of rebuilding — the production economics
-    * (an index is built when the corpus lands, then every job opens
-    * it by name) applied across process boundaries, which is exactly
-    * what a cold `Bench` run is. Keys embedding a per-JVM scratch
-    * fixture dir (`graft-run-`) or a per-test staged dir
-    * (`graft-test-`) stay session-local: those corpora die with the
-    * JVM, so persisting their artifacts would only grow the store
-    * with unreachable entries (and every scalatest JVM stages dozens).
-    *
-    * [[IndexStoreVersion]] salts the content key: any round that
-    * changes an artifact's SEMANTICS (training rule, layout, encoding)
-    * must bump it, or a stale store would serve old artifacts — the
-    * DuckDB hash gate would catch the drift, but the bump makes it
-    * structurally impossible. The key ALSO folds in a fingerprint of
-    * the corpus directory it names (sorted file names + sizes +
-    * mtimes), so regenerated data at the same path — a testdata
-    * refresh between rounds, a user re-pointing a dir — can never be
-    * served a stale index trained on the old bytes: only Verify runs
-    * behind the DuckDB hash gate; Bench and the scale-proof suite
-    * would otherwise record wrong numbers silently. Writes go to a
-    * pid-suffixed temp dir then move atomically into place; a
-    * concurrent loser deletes its copy and reads the winner's.
-    */
-  private[graft] val IndexStoreVersion = "v15-fprint"
-
-  /** Entries older than this are reaped at store open: test-JVM
-    * leftovers and superseded versions would otherwise accumulate on
-    * the RAM-backed tmpfs until reboot.
-    */
-  private val StoreTtlMillis = 3L * 24 * 3600 * 1000
-
-  /** Soft size cap: when the store exceeds this at open, oldest
-    * entries are evicted (hits refresh an entry's mtime, so eviction
-    * is LRU-ish). Sized well under the 16 GiB medium floor so the
-    * store can never be the thing that pushes scratch to disk.
-    */
-  private val StoreCapBytes = 12L << 30
-
-  /** Cap eviction never touches an entry whose mtime is inside this
-    * window (hits refresh mtime): a concurrently running JVM may still
-    * hold its path in the per-JVM cache and read it again mid-run.
-    */
-  private val EvictSafetyMillis = 2L * 3600 * 1000
-
-  /** The store lives on the same medium policy as scratch — a
-    * RAM-backed tmpfs when one has headroom — but OUTSIDE the reaped
-    * per-JVM root: tmpfs files persist across process exits (only a
-    * reboot clears them), and serving index artifacts from disk was
-    * measured to double iterative consumers' times at sf1 (every
-    * bfs/kcore/hits iteration re-reads its edge artifact). Falls back
-    * to the JVM tmpdir when no roomy tmpfs exists.
-    *
-    * The root is PER-USER (`graft-index-store-<user>`, 0700 where the
-    * filesystem supports POSIX permissions) and ownership-checked
-    * before trust: a world-shared fixed path on a multi-user box would
-    * let another account pre-populate digest dirs and serve arbitrary
-    * parquet as a trusted index artifact. A pre-existing root owned by
-    * someone else is NOT used — the store degrades to session-local
-    * (durable lookups disabled) rather than read an untrusted cache.
-    */
-  private lazy val storeRoot: Option[java.nio.file.Path] = {
-    import java.nio.file.{Files, Paths}
-    import java.nio.file.attribute.PosixFilePermissions
-    val floor = 16L << 30
-    val base = Some(Paths.get("/dev/shm")).filter { p =>
-      try Files.isDirectory(p) && Files.isWritable(p) &&
-        Files.getFileStore(p).getUsableSpace > floor
-      catch { case _: Throwable => false }
-    }.getOrElse(Paths.get(System.getProperty("java.io.tmpdir")))
-    val user = sys.props.getOrElse("user.name", "unknown")
-    val p = base.resolve(s"graft-index-store-$user")
-    try {
-      if (!Files.exists(p)) {
-        try Files.createDirectories(p,
-          PosixFilePermissions.asFileAttribute(
-            PosixFilePermissions.fromString("rwx------")))
-        catch { case _: UnsupportedOperationException =>
-          Files.createDirectories(p) }
-      }
-      val owner = Files.getOwner(p).getName
-      if (owner != user) {
-        System.err.println(s"[graft] WARN: index store '$p' is owned by " +
-          s"'$owner', not '$user'; durable index store DISABLED for this JVM")
-        None
-      } else { sweep(p); Some(p) }
-    } catch { case t: Throwable =>
-      System.err.println(s"[graft] WARN: index store unavailable ($t); " +
-        "durable index store disabled for this JVM")
-      None
-    }
-  }
-
-  /** Open-time reclamation: torn pid-suffixed temps from crashed JVMs
-    * (> 6 h old), entries past [[StoreTtlMillis]], the legacy
-    * world-shared `graft-index-store` root from earlier versions, and
-    * — if the store still exceeds [[StoreCapBytes]] — oldest entries
-    * first until under cap. All deletions are of pure caches (every
-    * entry is a deterministic function of its key), so the worst case
-    * of an over-eager sweep is a rebuild.
-    */
-  private def sweep(root: java.nio.file.Path): Unit = {
-    import java.nio.file.Files
-    import scala.jdk.CollectionConverters._
-    val now = System.currentTimeMillis()
-    try {
-      val legacy = root.getParent.resolve("graft-index-store")
-      if (Files.isDirectory(legacy) &&
-          Files.getOwner(legacy).getName == sys.props.getOrElse("user.name", ""))
-        TmpDirs.rmrfPath(legacy)
-    } catch { case _: Throwable => () }
-    try {
-      def listed(p: java.nio.file.Path): List[java.nio.file.Path] = {
-        val st = Files.list(p)
-        try st.iterator().asScala.toList finally st.close()
-      }
-      val entries = listed(root)
-      def mtime(p: java.nio.file.Path): Long =
-        try Files.getLastModifiedTime(p).toMillis catch { case _: Throwable => 0L }
-      entries.foreach { e =>
-        val name = e.getFileName.toString
-        val age = now - mtime(e)
-        if ((name.contains(".") && age > 6L * 3600 * 1000) || age > StoreTtlMillis)
-          TmpDirs.rmrfPath(e)
-      }
-      def treeSize(p: java.nio.file.Path): Long =
-        try {
-          val st = Files.walk(p)
-          try st.iterator().asScala
-            .filter(Files.isRegularFile(_)).map(f =>
-              try Files.size(f) catch { case _: Throwable => 0L }).sum
-          finally st.close()
-        } catch { case _: Throwable => 0L }
-      // Cap eviction skips entries touched within the safety window: a
-      // CONCURRENT JVM resolves a store path into its per-JVM cache at
-      // first hit and may read it again much later in a long bench run —
-      // evicting a just-refreshed entry from another process would turn
-      // that JVM's next read into a mid-run failure (the read path also
-      // self-heals by rebuilding, but not evicting live entries is the
-      // cheaper half of the fix).
-      val live = listed(root)
-        .map(e => (e, mtime(e), treeSize(e))).sortBy(_._2)
-      var total = live.map(_._3).sum
-      live.iterator.takeWhile(_ => total > StoreCapBytes)
-        .filter { case (_, mt, _) => now - mt > EvictSafetyMillis }
-        .foreach { case (e, _, sz) =>
-          System.err.println(s"[graft] index store over cap; evicting " +
-            s"'${e.getFileName}' (${sz >> 20} MiB)")
-          TmpDirs.rmrfPath(e); total -= sz
-      }
-    } catch { case _: Throwable => () }
-  }
-
-  /** Cheap content fingerprint of the corpus directory a key names —
-    * the key convention is `label|params…|<dir>`, so the final
-    * `|`-segment is probed as a path. Recursive (sorted) walk of file
-    * names + sizes + mtimes, capped at 16384 entries (a corpus dir is
-    * tables-of-parquet-parts, typically well under that); non-existent
-    * or non-directory tails contribute an empty fingerprint, keeping
-    * the digest a pure function of the key string as before.
-    */
-  private def corpusFingerprint(key: String): String = {
-    import java.nio.file.{Files, Paths}
-    import scala.jdk.CollectionConverters._
-    val tail = key.substring(key.lastIndexOf('|') + 1)
-    try {
-      val p = Paths.get(tail)
-      if (!Files.isDirectory(p)) ""
-      else {
-        val md = java.security.MessageDigest.getInstance("MD5")
-        val st = Files.walk(p)
-        val all = try st.iterator().asScala
-          .filter(Files.isRegularFile(_))
-          .map { f =>
-            val (sz, mt) =
-              try (Files.size(f), Files.getLastModifiedTime(f).toMillis)
-              catch { case _: Throwable => (0L, 0L) }
-            (p.relativize(f).toString, sz, mt)
-          }.toSeq
-        finally st.close()
-        all.sortBy(_._1).take(16384).foreach { case (rel, sz, mt) =>
-          md.update(s"$rel:$sz:$mt\n".getBytes("UTF-8"))
-        }
-        // totals over EVERY entry (uncapped): a corpus with >16384 files
-        // regenerated only in later-sorted files still changes the key
-        md.update((s"#n=${all.size}:bytes=${all.iterator.map(_._2).sum}" +
-          s":maxmt=${if (all.isEmpty) 0L else all.iterator.map(_._3).max}\n")
-          .getBytes("UTF-8"))
-        md.digest().map("%02x".format(_)).mkString
-      }
-    } catch { case _: Throwable => "" }
-  }
-
-  /** Per-JVM memo of corpus fingerprints: a corpus dir is immutable for
-    * the life of a run, and fingerprinting it per durable lookup would
-    * charge a directory walk to every ANN-family key.
-    */
-  private val fprints = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Artifact-key prefixes excluded from the durable store for this
-    * JVM (SPARK_GRAFT_STORE_BYPASS, comma-separated). Measurement
-    * knob for scaling sweeps: a key whose work product IS a staged
-    * artifact (sim_ann_recall's eval tables, assortativity's co-edge
-    * rollup) must stage COLD in a sweep leg or its scaling law reads
-    * a warm-store ~0 s and passes vacuously — bypassing the store for
-    * exactly those prefixes keeps every other artifact warm (their
-    * cost is subtracted per-key anyway) while the charged ones build
-    * and land in `index_staging` where bench_ratio's --charge folds
-    * them back into the key.
-    */
-  private lazy val bypassPrefixes: Seq[String] =
-    sys.env.get("SPARK_GRAFT_STORE_BYPASS").toSeq
-      .flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty)
-
-  private def durableDir(key: String): Option[java.nio.file.Path] =
-    if (key.contains("graft-run-") || key.contains("graft-test-") ||
-        bypassPrefixes.exists(key.startsWith)) None
-    else storeRoot.map { root =>
-      val tail = key.substring(key.lastIndexOf('|') + 1)
-      val fp = fprints.computeIfAbsent(tail, _ => corpusFingerprint(key))
-      val dig = java.security.MessageDigest.getInstance("MD5")
-        .digest(s"$IndexStoreVersion|$key|$fp".getBytes("UTF-8"))
-        .map("%02x".format(_)).mkString
-      root.resolve(dig)
-    }
-
-  /** Keys served from the cross-JVM store this JVM (vs built): Bench
-    * emits this so a near-zero per-key time can be attributed to a
-    * warm artifact instead of reading as a free operator.
-    */
-  private val storeHitKeys =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  def storeHits: Set[String] = {
-    import scala.jdk.CollectionConverters._
-    storeHitKeys.asScala.toSet
-  }
+  /** Always empty: artifacts are never served from a cross-run store. */
+  def storeHits: Set[String] = Set.empty
 
   /** Per-JVM ledger of cold-build costs (key → seconds). Bench reads
     * this between queries to move staging time OUT of whichever query
@@ -720,180 +479,43 @@ object IndexCache {
     stagedSecs.asScala.toMap
   }
 
-  /** NOT computeIfAbsent: an index build may itself stage a nested
-    * index (co-edges builds on co-pairs), and a nested computeIfAbsent
-    * on the same map throws "Recursive update". Double-checked
-    * putIfAbsent is re-entrant; a concurrent duplicate build wastes
-    * work but first-write-wins keeps every reader consistent.
+  /** DataFrame-valued artifacts: the build is written once to scratch
+    * parquet through [[dir]] and every caller reads it back.
     */
   def apply(s: SparkSession, key: String, build: => DataFrame): DataFrame =
-    try applyOnce(s, key, build)
-    catch { case t: Throwable =>
-      // Self-heal against cross-JVM eviction: another process's
-      // open-time sweep (TTL/cap) may rm-rf a store entry AFTER this
-      // JVM resolved it into the per-JVM paths cache — a later
-      // read.parquet of the evicted path then throws mid-run. Drop the
-      // cached resolution and rebuild once (every entry is a pure
-      // function of its key, so the worst case is the build cost).
-      System.err.println(s"[graft] index '$key' read failed " +
-        s"(${t.getClass.getSimpleName}); dropping cached path and rebuilding")
-      paths.remove(key)
-      applyOnce(s, key, build)
-    }
-
-  private def applyOnce(s: SparkSession, key: String, build: => DataFrame): DataFrame = {
-    val cached = paths.get(key)
-    val path = if (cached != null) cached else {
-      val durable = durableDir(key)
-      val hit = durable.filter(dp =>
-        java.nio.file.Files.exists(dp.resolve("_SUCCESS")))
-      val p = hit match {
-        case Some(dp) =>
-          // cross-JVM reload: the build is skipped entirely; no staging
-          // cost is ledgered because none was paid. The hit is ledgered
-          // (bench attribution) and refreshes the entry's mtime (LRU
-          // eviction order in [[sweep]]).
-          System.err.println(s"[graft] index '$key' reloaded from store")
-          storeHitKeys.add(key)
-          try java.nio.file.Files.setLastModifiedTime(dp,
-            java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis()))
-          catch { case _: Throwable => () }
-          dp.toString
-        case None =>
-          val t0 = System.nanoTime()
-          // Build into TmpDirs scratch FIRST (which has its own
-          // low-water disk fallback), then migrate into the store —
-          // an ENOSPC or any other IOException against a full store
-          // medium degrades to serving the scratch copy instead of
-          // failing the whole query, mirroring [[dir]]'s behavior.
-          val sp = TmpDirs.dir("idx")
-          build.write.mode("overwrite").parquet(sp)
-          val out = durable match {
-            case Some(dp) =>
-              // copy into a pid-suffixed sibling, then one atomic move —
-              // concurrent JVMs race benignly (loser reads the winner)
-              val tmp = dp.resolveSibling(
-                dp.getFileName.toString + "." + ProcessHandle.current().pid())
-              try {
-                copyTree(java.nio.file.Paths.get(sp), tmp)
-                java.nio.file.Files.move(tmp, dp,
-                  java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-                dp.toString
-              } catch {
-                case _: java.nio.file.FileAlreadyExistsException |
-                    _: java.nio.file.AccessDeniedException |
-                    _: java.nio.file.DirectoryNotEmptyException =>
-                  TmpDirs.rmrfPath(tmp); dp.toString
-                case _: java.io.IOException =>
-                  TmpDirs.rmrfPath(tmp); sp // store unusable: serve the build
-              }
-            case None => sp
-          }
-          val secs = (System.nanoTime() - t0) / 1e9
-          stagedSecs.put(key, secs)
-          // staging cost is also visible inline for ad-hoc runs
-          System.err.println(f"[graft] index '$key' staged in $secs%.2f s")
-          out
-      }
-      val prev = paths.putIfAbsent(key, p)
-      if (prev != null) prev else p
-    }
-    s.read.parquet(path)
-  }
+    s.read.parquet(dir(key) {
+      val p = TmpDirs.dir("idx")
+      build.write.mode("overwrite").parquet(p)
+      p
+    })
 
   /** PATH-valued artifacts — staged archive LAYOUTS (KPL frame files,
-    * gzip NDJSON encodes, date-partitioned trees) rather than derived
-    * relations. Same build-once/query-many economics and the same bench
-    * attribution as the DataFrame overload: the staged bytes are a pure
-    * function of the source dir, written once when the corpus lands,
-    * then read by every scan/replay of that layout — so the cold write
-    * belongs to `index_staging`, not to whichever query ran first.
+    * gzip NDJSON encodes, date-partitioned trees) — and the store under
+    * [[apply]]. `build` runs on a miss and returns the directory it
+    * wrote.
     *
-    * Same putIfAbsent re-entrancy rationale as [[apply]], with the same
-    * trade: two CONCURRENT first callers both execute the (expensive
-    * Spark write) build and the loser's directory is orphaned until
-    * JVM-exit reaping — acceptable because builds are idempotent pure
-    * functions of the key and suites stage disjoint archives; if
-    * parallel suites ever contend on one archive, switch to a per-key
-    * future map (ConcurrentHashMap[String, Future[String]]) rather
-    * than computeIfAbsent (nested builds would deadlock it).
+    * NOT computeIfAbsent: a build may itself stage a nested artifact
+    * (co-edges builds on co-counts), and a nested computeIfAbsent on the
+    * same map throws "Recursive update". Double-checked putIfAbsent is
+    * re-entrant; two CONCURRENT first callers both build, first write
+    * wins and the loser's directory waits for JVM-exit reaping.
     */
-  def dir(key: String, durable: Boolean = true)(build: => String): String = {
+  def dir(key: String)(build: => String): String = {
     val cached = paths.get(key)
-    // re-validate a cached store resolution: another JVM's sweep may
-    // have evicted the entry since it was first resolved — a missing
-    // layout must re-stage, not hand consumers a dangling path
-    if (cached != null &&
-        java.nio.file.Files.isDirectory(java.nio.file.Paths.get(cached))) cached
+    if (cached != null) cached
     else {
-      if (cached != null) {
-        System.err.println(s"[graft] staged layout '$key' vanished " +
-          "(cross-JVM eviction); re-staging")
-        paths.remove(key, cached)
+      val t0 = System.nanoTime()
+      val built = build
+      val prev = paths.putIfAbsent(key, built)
+      if (prev != null) prev
+      else {
+        val secs = (System.nanoTime() - t0) / 1e9
+        stagedSecs.put(key, secs)
+        // staging cost is also visible inline for ad-hoc runs
+        System.err.println(f"[graft] index '$key' staged in $secs%.2f s")
+        built
       }
-      val durableP = if (durable) durableDir(key) else None
-      val hit = durableP.filter(dp =>
-        java.nio.file.Files.exists(dp.resolve("_GRAFT_STAGED")))
-      val p = hit match {
-        case Some(dp) =>
-          System.err.println(s"[graft] index '$key' reloaded from store")
-          storeHitKeys.add(key)
-          try java.nio.file.Files.setLastModifiedTime(dp,
-            java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis()))
-          catch { case _: Throwable => () }
-          dp.toString
-        case None =>
-          val t0 = System.nanoTime()
-          val built = build
-          val out = durableP match {
-            case Some(dp) =>
-              // migrate the built layout into the store (copy — the
-              // build may sit on a different filesystem), marker last
-              // so a torn copy never reads as staged, then one atomic
-              // move into place
-              val tmp = dp.resolveSibling(
-                dp.getFileName.toString + "." + ProcessHandle.current().pid())
-              try {
-                copyTree(java.nio.file.Paths.get(built), tmp)
-                java.nio.file.Files.createFile(tmp.resolve("_GRAFT_STAGED"))
-                java.nio.file.Files.move(tmp, dp,
-                  java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-                dp.toString
-              } catch {
-                case _: java.nio.file.FileAlreadyExistsException |
-                    _: java.nio.file.AccessDeniedException |
-                    _: java.nio.file.DirectoryNotEmptyException =>
-                  TmpDirs.rmrfPath(tmp); dp.toString
-                case _: java.io.IOException =>
-                  TmpDirs.rmrfPath(tmp); built // store unusable: serve the build
-              }
-            case None => built
-          }
-          val secs = (System.nanoTime() - t0) / 1e9
-          stagedSecs.put(key, secs)
-          System.err.println(f"[graft] index '$key' staged in $secs%.2f s")
-          out
-      }
-      val prev = paths.putIfAbsent(key, p)
-      if (prev != null) prev else p
     }
-  }
-
-  private def copyTree(src: java.nio.file.Path, dst: java.nio.file.Path): Unit = {
-    import java.nio.file._
-    import java.nio.file.attribute.BasicFileAttributes
-    Files.createDirectories(dst)
-    Files.walkFileTree(src, new SimpleFileVisitor[Path] {
-      override def preVisitDirectory(d: Path, a: BasicFileAttributes) = {
-        Files.createDirectories(dst.resolve(src.relativize(d)))
-        FileVisitResult.CONTINUE
-      }
-      override def visitFile(f: Path, a: BasicFileAttributes) = {
-        Files.copy(f, dst.resolve(src.relativize(f)),
-          StandardCopyOption.REPLACE_EXISTING)
-        FileVisitResult.CONTINUE
-      }
-    })
   }
 }
 
@@ -1018,32 +640,11 @@ object Sessions {
     * completion AvailableNow shape Verify/Bench execute, where every
     * key pays query startup + each micro-batch as marginal cost.
     */
-  /** Optional state-store provider override for A/B measurement
-    * (`SPARK_GRAFT_STATE_PROVIDER=rocksdb`). Default stays the
-    * HDFS-backed in-memory provider: for the AvailableNow
-    * run-to-completion shape the engine's keys execute — tiny state,
-    * 1–2 micro-batches, 4 shards — RocksDB pays native-instance spin-up
-    * and snapshot zip/upload per shard per commit that the in-memory
-    * provider never does (measured r16: no win, see
-    * OPTIMIZATION_r16.md). The knob stays so a long-lived large-state
-    * deployment (where RocksDB's off-heap state wins) can flip it
-    * without a code change.
-    */
-  private val StateProviderConfs: Seq[(String, String)] =
-    sys.env.get("SPARK_GRAFT_STATE_PROVIDER") match {
-      case Some("rocksdb") => Seq(
-        "spark.sql.streaming.stateStore.providerClass" ->
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
-          "false")
-      case _ => Nil
-    }
-
   def streamScope[T](s: SparkSession, noDataBatch: Boolean = false)(body: => T): T =
     withConfs(s,
-      Seq("spark.sql.shuffle.partitions" -> StreamStateShards.toString,
-        "spark.sql.streaming.noDataMicroBatches.enabled" -> noDataBatch.toString)
-        ++ StateProviderConfs: _*)(body)
+      "spark.sql.shuffle.partitions" -> StreamStateShards.toString,
+      "spark.sql.streaming.noDataMicroBatches.enabled" -> noDataBatch.toString)(body)
+
   def config(b: SparkSession.Builder, cpus: String): SparkSession.Builder =
     b.withExtensions(new graft.plans.GraftExtensions()(_))
       .config("spark.sql.shuffle.partitions", cpus)

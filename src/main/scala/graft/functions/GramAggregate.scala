@@ -6,7 +6,7 @@ import java.math.BigInteger
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, GenericInternalRow}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, ExpressionInfo, GenericInternalRow}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -95,14 +95,19 @@ final class GramBuffer {
   * carrier the declared queries render, cast back to DECIMAL(38,0)
   * where arithmetic continues). At 100 TB the buffer stays
   * O(d²) per task regardless of corpus size.
+  *
+  * Input must be array<bigint>: any other type fails at analysis
+  * instead of mid-task in `getLong`.
   */
 case class GramSum(
     child: Expression,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[GramBuffer] {
+  extends TypedImperativeAggregate[GramBuffer] with ExpectsInputTypes {
 
   override def children: Seq[Expression] = Seq(child)
+
+  override def inputTypes = Seq(ArrayType(LongType))
 
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): Expression =

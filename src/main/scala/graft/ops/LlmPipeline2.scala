@@ -1279,8 +1279,8 @@ object LlmPipeline2 {
     * rewrite. The one driver-side scalar (max id) is a 1-row agg.
     */
   /** The pristine persisted IVF artifact pair for (corpus, K) as ONE
-    * copyable directory, staged through the durable store exactly once
-    * per corpus (r15 VERDICT ask #5): `index_append` must start every
+    * copyable directory, staged through [[graft.core.IndexCache]] once
+    * per corpus per JVM (r15 VERDICT ask #5): `index_append` must start every
     * invocation from an un-appended base to stay idempotent across
     * bench reps, and re-running [[ivfPersist]]'s two parquet writes per
     * call was the entire re-staging cost. Now the base is written once

@@ -74,4 +74,12 @@ class GramAggregateSpec extends SparkSpec {
     assert(asMap(many) === asMap(exploded(base.toDF("q"))))
   }
 
+  test("gram_sum over array<string> fails at analysis, before any job runs") {
+    GramAggregate.register(spark)
+    Seq(Seq("a", "b")).toDF("q").createOrReplaceTempView("gram_misuse")
+    // spark.sql only analyzes: the throw comes before any action exists
+    val e = intercept[org.apache.spark.sql.AnalysisException](
+      spark.sql("SELECT gram_sum(q) FROM gram_misuse"))
+    assert(e.getMessage.contains("gram_sum"), e.getMessage)
+  }
 }

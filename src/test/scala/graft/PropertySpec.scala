@@ -940,7 +940,7 @@ class PropertySpec extends SparkSpec {
       mft <- Gen.chooseNum(1, 3)
     } yield (rows, files, mft)
     Gen.listOfN(5, g).sample.getOrElse(Nil).foreach { case (rows, files, mft) =>
-      val dir = java.nio.file.Files.createTempDirectory("graft-test-sf").toString
+      val dir = SparkSpec.stageDir()
       rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
         .repartition(files).write.mode("overwrite").parquet(s"$dir/events.parquet")
       val throttled = graft.streaming.Replay.aggregateReplayed(spark,
@@ -1025,7 +1025,7 @@ class PropertySpec extends SparkSpec {
     } yield (rows, files, mft, salt, s1, s2)
     Gen.listOfN(3, g).sample.getOrElse(Nil).foreach {
       case (rows, files, mft, salt, s1, s2) =>
-        val dir = java.nio.file.Files.createTempDirectory("graft-test-sf").toString
+        val dir = SparkSpec.stageDir()
         rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
           .repartition(files).write.mode("overwrite")
           .parquet(s"$dir/events.parquet")

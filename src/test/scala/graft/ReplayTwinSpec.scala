@@ -24,8 +24,8 @@ class ReplayTwinSpec extends SparkSpec {
 
   test("text replay counts and dead-letters malformed lines (A9 failed records)") {
     import org.apache.spark.sql.functions._
-    val arch = graft.core.Ndjson.stageGz(spark, sf, "corrupt-archive",
-      durable = false) // this test MUTATES its staged copy
+    // own label: this test MUTATES its staged copy
+    val arch = graft.core.Ndjson.stageGz(spark, sf, "corrupt-archive")
     java.nio.file.Files.write(
       java.nio.file.Paths.get(arch, "garbage.txt"),
       "not json at all\n{\n{\"event_id\": oops}\n".getBytes("UTF-8"))

@@ -25,9 +25,10 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.sparkContext.setLogLevel("WARN")
   }
 
-  /** Write the given tables as `<tmp>/<name>.parquet` and return the dir. */
+  /** Write the given tables as `<dir>/<name>.parquet` in a fresh
+    * [[SparkSpec.stageDir]] and return the dir. */
   def stageTables(tables: (String, DataFrame)*): String = {
-    val dir = Files.createTempDirectory("graft-test-sf").toString
+    val dir = SparkSpec.stageDir()
     tables.foreach { case (name, df) =>
       df.coalesce(1).write.mode("overwrite").parquet(s"$dir/$name.parquet")
     }
@@ -36,4 +37,20 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   def run(key: String, dir: String = sf): DataFrame =
     SparkEntry.queries(key)(spark, dir)
+}
+
+object SparkSpec {
+  /** One per-JVM root for every staged test corpus, deleted at JVM exit.
+    * Its name puts `graft-test-` in every staged path, which is what
+    * marks a dir as mutable for `Tables`' relation memo.
+    */
+  private lazy val stageRoot: java.nio.file.Path = {
+    val p = Files.createTempDirectory("graft-test-")
+    Runtime.getRuntime.addShutdownHook(new Thread(() =>
+      org.apache.commons.io.FileUtils.deleteQuietly(p.toFile)))
+    p
+  }
+
+  /** A fresh empty dir under the per-JVM staging root. */
+  def stageDir(): String = Files.createTempDirectory(stageRoot, "sf").toString
 }

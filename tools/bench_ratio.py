@@ -11,10 +11,9 @@ starts with `prefix` INTO that key's measured seconds (symmetrically in
 both legs) before the ratio is computed, and records the charged
 amounts per leg. This is for keys whose work product IS a staged
 artifact (e.g. sim_ann_recall's eval tables): Bench subtracts staging
-from per-key times so the first consumer isn't mis-charged, but for
-such keys a warm-store run then records ~0 s and any scaling law over
-the bare number passes vacuously — the charge puts the key's own
-artifact cost back where the law can see it.
+from per-key times so the first consumer isn't mis-charged, which
+leaves such keys near 0 s — the charge puts the key's own artifact cost
+back where a scaling law can see it.
 """
 import json, sys
 
@@ -70,16 +69,12 @@ def main(lo_path: str, hi_path: str, out_path: str, *extra) -> int:
         "total_ratio": round(tot_hi / max(tot_lo, 1e-9), 2),
         "index_staging_lo": round(lo.get("index_staging_sec", 0), 1),
         "index_staging_hi": round(hi.get("index_staging_sec", 0), 1),
-        # per-artifact staging + warm-store attribution (VERDICT r13
-        # ask #4): a 0.00 per-key time or a 0.0 staging total must be
-        # attributable to a warm cross-JVM artifact, never read as
-        # "free". Maps come straight from each leg's bench_full.json.
+        # per-artifact staging (VERDICT r13 ask #4), straight from each
+        # leg's bench_full.json
         "index_staging_detail_lo": {k: round(v, 2) for k, v in
                                     lo.get("index_staging", {}).items()},
         "index_staging_detail_hi": {k: round(v, 2) for k, v in
                                     hi.get("index_staging", {}).items()},
-        "index_store_hits_lo": lo.get("index_store_hits", {}),
-        "index_store_hits_hi": hi.get("index_store_hits", {}),
         "load_lo": lo.get("load"), "load_hi": hi.get("load"),
         "reps_lo": lo.get("reps"), "reps_hi": hi.get("reps"),
         "n_keys": len(keys),
