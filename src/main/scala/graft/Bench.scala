@@ -61,6 +61,23 @@ object Bench {
     out
   }
 
+  /** File a run's full record goes to. Only the protocol shape, the whole
+   *  surface at 32 cores on an sf0.1 corpus, writes `bench_full.json`: it
+   *  is the committed record ScaleProofSpec's operator-share law reads,
+   *  and its bounds describe a 32-core run. A `SPARK_GRAFT_ONLY` subset
+   *  writes `bench_full.subset.json`; every other full run writes a
+   *  sidecar named after its cores, `bench_full.c<N>.json`, with the
+   *  corpus dir's last path component in front when that is not sf0.1
+   *  (`bench_full.sf1.c32.json`). So a scaling leg or a local run can
+   *  never overwrite the protocol record. */
+  def recordPath(cpus: String, sfDir: String, subset: Boolean): String = {
+    val corpus = sfDir.split('/').filter(_.nonEmpty).lastOption.getOrElse("")
+    val tag = if (corpus == "sf0.1") "" else s".$corpus"
+    if (subset) "bench_full.subset.json"
+    else if (tag.isEmpty && cpus == "32") "bench_full.json"
+    else s"bench_full$tag.c$cpus.json"
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -193,12 +210,8 @@ object Bench {
           ",\"lifecycle_floor\":" + fmt(floor) +
           ",\"operator_sec\":" + fmt(math.max(0.0, t - floor)) + "}"
     }.mkString("{", ",", "}")
-    val full = s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,"load":"$load","errors":$errJson,"index_staging_sec":$stagingTotal,"total_with_staging":${total + stagingTotal},"index_staging":$stagingJson,"stream_split":$streamSplitJson,"queries":$fullQs,"sf":"$sfDir"}"""
-    // SPARK_GRAFT_ONLY runs write to a sidecar: the committed
-    // bench_full.json is the full-409-key driver-protocol record and a
-    // targeted subset run must never clobber it (r15's snapshot committed
-    // exactly that clobber and ScaleProofSpec correctly went red).
-    val fullPath = if (only.isDefined) "bench_full.subset.json" else "bench_full.json"
+    val full = s"""{"metric":"total","value":$total,"unit":"sec","cpus":$cpus,"reps":$reps,"load":"$load","errors":$errJson,"index_staging_sec":$stagingTotal,"total_with_staging":${total + stagingTotal},"index_staging":$stagingJson,"stream_split":$streamSplitJson,"queries":$fullQs,"sf":"$sfDir"}"""
+    val fullPath = recordPath(cpus, sfDir, only.isDefined)
     try {
       java.nio.file.Files.write(java.nio.file.Paths.get(fullPath),
         (full + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))

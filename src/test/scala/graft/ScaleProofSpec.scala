@@ -349,6 +349,15 @@ class ScaleProofSpec extends SparkSpec {
     val sfv = rec.select("sf").collect()(0).getString(0)
     assume(sfv.endsWith("sf0.1"),
       "the committed record must be the driver-protocol sf0.1 run")
+    // The bounds below describe a 32-core record. Records from before
+    // Bench stated its cores carry no `cpus`; one that states it must
+    // state 32, or a scaling leg or local run was committed in its place.
+    if (rec.schema.fieldNames.contains("cpus")) {
+      val cpus = rec.select("cpus").collect()(0).get(0).toString
+      assert(cpus == "32",
+        s"bench_full.json states cpus=$cpus: a non-protocol run wrote the " +
+          "record; only a 32-core full sf0.1 run may (Bench.recordPath)")
+    }
     assert(rec.schema.fieldNames.contains("stream_split"),
       "the record must carry the per-key lifecycle/operator split")
     val q = rec.select("stream_split.*")

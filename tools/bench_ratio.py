@@ -3,6 +3,10 @@
 record: per-key seconds at each SF plus the time ratio. Usage:
     python3 tools/bench_ratio.py <bench_lo.json> <bench_hi.json> <out.json> \\
         [--charge key:artifact_prefix ...]
+Any Bench record is a valid input: the protocol bench_full.json or a
+sidecar such as bench_full.c8.json (another core count) or
+bench_full.sf1.c32.json (another corpus dir), e.g. bench_full.c8.json
+against bench_full.sf1.c8.json for an 8-core sf0.1 → sf1 leg.
 Ratios use a 0.15 s floor on the denominator so fixed-overhead keys
 (sub-100 ms at both SFs) don't report meaningless 20x blips.
 
