@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import graft.core.Json
 
 object Bench {
   /** The driver captures only the LAST ~2000 characters of stdout and
@@ -42,12 +43,12 @@ object Bench {
    *  a plan audit cares about — always survives verbatim. */
   private def render(results: Seq[(String, Double)], total: Double, sfDir: String,
       errors: Seq[String], load: String, stagingSec: Double): String = {
-    val errJson = errors.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val errJson = errors.sorted.map(Json.str).mkString("[", ",", "]")
     def line(keep: Seq[(String, Double)], restN: Int, restSum: Double): String = {
-      val entries = keep.sortBy(_._1).map { case (k, v) => "\"" + k + "\":" + fmt2(v) } ++
+      val entries = keep.sortBy(_._1).map { case (k, v) => Json.str(k) + ":" + fmt2(v) } ++
         (if (restN > 0) Seq("\"_rest_n\":" + restN, "\"_rest_sec\":" + fmt2(restSum)) else Nil)
       val qs = entries.mkString("{", ",", "}")
-      s"""{"metric":"total","value":${fmt2(total)},"unit":"sec","n":${results.size},"load":"$load","errors":$errJson,"index_staging_sec":${fmt2(stagingSec)},"queries":$qs,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${fmt2(total)},"unit":"sec","n":${results.size},"load":"$load","errors":$errJson,"index_staging_sec":${fmt2(stagingSec)},"queries":$qs,"sf":${Json.str(sfDir)}}"""
     }
     // Drop cheapest-first until the line fits.
     val byCost = results.sortBy(_._2)
@@ -188,14 +189,13 @@ object Bench {
     val load = s"$loadStart ${loadavg()}" // 1-min loadavg at start + end
     // Full-precision per-query record for humans / round-over-round diffs
     // (the stdout line below may fold cheap queries into `_rest`).
-    val errJson = errors.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val fullQs = results.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+    val errJson = errors.sorted.map(Json.str).mkString("[", ",", "]")
+    val fullQs = results.map { case (k, v) => Json.str(k) + ":" + v }.mkString("{", ",", "}")
     // cold index builds, attributed to their artifact key instead of
     // whichever query ran first
-    def esc(x: String) = x.replace("\\", "\\\\").replace("\"", "\\\"")
     val staging = graft.core.IndexCache.stagingLog.toSeq.sortBy(_._1)
     val stagingJson = staging
-      .map { case (k, v) => "\"" + esc(k) + "\":" + v }.mkString("{", ",", "}")
+      .map { case (k, v) => Json.str(k) + ":" + v }.mkString("{", ",", "}")
     val stagingTotal = staging.map(_._2).sum
     // streaming lifecycle/operator split: floor = lifecycles × the
     // StreamCostProbe-measured per-lifecycle machinery cost (0.5 s —
@@ -206,11 +206,11 @@ object Bench {
       case (q, lc) =>
         val t = results.collectFirst { case (`q`, v) if v >= 0 => v }.getOrElse(0.0)
         val floor = lc * LifecycleFloorSec
-        "\"" + esc(q) + "\":{\"lifecycles\":" + lc +
+        Json.str(q) + ":{\"lifecycles\":" + lc +
           ",\"lifecycle_floor\":" + fmt(floor) +
           ",\"operator_sec\":" + fmt(math.max(0.0, t - floor)) + "}"
     }.mkString("{", ",", "}")
-    val full = s"""{"metric":"total","value":$total,"unit":"sec","cpus":$cpus,"reps":$reps,"load":"$load","errors":$errJson,"index_staging_sec":$stagingTotal,"total_with_staging":${total + stagingTotal},"index_staging":$stagingJson,"stream_split":$streamSplitJson,"queries":$fullQs,"sf":"$sfDir"}"""
+    val full = s"""{"metric":"total","value":$total,"unit":"sec","cpus":$cpus,"reps":$reps,"load":"$load","errors":$errJson,"index_staging_sec":$stagingTotal,"total_with_staging":${total + stagingTotal},"index_staging":$stagingJson,"stream_split":$streamSplitJson,"queries":$fullQs,"sf":${Json.str(sfDir)}}"""
     val fullPath = recordPath(cpus, sfDir, only.isDefined)
     try {
       java.nio.file.Files.write(java.nio.file.Paths.get(fullPath),

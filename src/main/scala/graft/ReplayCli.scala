@@ -2,8 +2,8 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.Tables
-import graft.streaming.Replay
+import graft.core.Json
+import graft.streaming.{Replay, ReplayReport}
 
 /** The standalone replay CLI — the reference's own shape (a command
   * with bucket/prefix, time-range, stream, and rate flags) mapped onto
@@ -11,9 +11,9 @@ import graft.streaming.Replay
   * store archive into a Kinesis stream; this main drains a file-lake
   * archive into the sharded, batch-capped, epoch-idempotent sink the
   * engine models Kinesis with ([[Replay.replayArchive]] /
-  * [[Replay.replayTextGz]]), then prints one JSON summary line (rows
-  * replayed, micro-batches, enforced pacing, sink path) — the A9
-  * progress surface as a script-consumable record.
+  * [[Replay.replayNdjsonGz]]), then prints the run's [[ReplayReport]]
+  * as one JSON line ([[json]]) — the A9 progress surface as a
+  * script-consumable record.
   *
   * Flags (reference surface → here):
   *   --source PATH        archive to replay: a parquet file/dir, or an
@@ -123,11 +123,11 @@ object ReplayCli {
     }
   }
 
-  /** Run one replay per the parsed flags; returns the sink path. The
+  /** Run one replay per the parsed flags; returns its report. The
     * testable core — `main` adds only session construction and the
     * printed summary.
     */
-  private[graft] def run(s: SparkSession, c: Config): String = {
+  private[graft] def run(s: SparkSession, c: Config): ReplayReport = {
     val resume = c.sink.map(dir =>
       (dir, graft.core.TmpDirs.stable(
         "cli-ckpt-" + java.security.MessageDigest.getInstance("MD5")
@@ -140,7 +140,7 @@ object ReplayCli {
         // prefixes-then-streams raw objects the same way)
         require(c.fromMs.isEmpty && c.toMs.isEmpty && c.filter.isEmpty,
           "--from/--to/--filter require --format parquet")
-        Replay.replayTextGz(s, c.source, c.shards)
+        Replay.replayNdjsonGz(s, c.source, c.shards)
       case _ =>
         Replay.replayArchive(s, c.source, c.shards,
           maxFilesPerTrigger = c.maxFilesPerTrigger,
@@ -158,11 +158,22 @@ object ReplayCli {
     val spark = graft.core.Sessions.config(
       SparkSession.builder().master(s"local[$cpus]"), cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val out = run(spark, c)
-    val batches = Replay.lastReplayProgress.count(_._2 > 0)
-    println(s"""{"rows":${Replay.lastReplayRows},"batches":$batches,""" +
-      s""""pacing_ms":${Replay.lastSinkPacingMs},""" +
-      s""""retried_records":${Replay.lastRetriedRecords},"sink":"$out"}""")
+    println(json(run(spark, c)))
     spark.stop()
+  }
+
+  /** The printed summary: every report field, `null` where one does
+    * not apply. `batches` counts the micro-batches that carried rows;
+    * `batch_rows` lists [batchId, rows] for every one.
+    */
+  private[graft] def json(r: ReplayReport): String = {
+    def opt(v: Option[Long]) = v.fold("null")(_.toString)
+    val batchRows = r.batches.map { case (b, n) => s"[$b,$n]" }.mkString("[", ",", "]")
+    val phases = r.phaseMs.toSeq.sorted
+      .map { case (k, v) => s"${Json.str(k)}:$v" }.mkString("{", ",", "}")
+    s"""{"rows":${r.rows},"batches":${r.batches.count(_._2 > 0)},""" +
+      s""""batch_rows":$batchRows,"pacing_ms":${r.pacingMs},"sink_ms":${r.sinkMs},""" +
+      s""""retried_records":${opt(r.retried)},"dead_lettered":${opt(r.deadLettered)},""" +
+      s""""phase_ms":$phases,"sink":${Json.str(r.sink)}}"""
   }
 }

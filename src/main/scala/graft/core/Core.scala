@@ -645,7 +645,23 @@ object Sessions {
       "spark.sql.shuffle.partitions" -> StreamStateShards.toString,
       "spark.sql.streaming.noDataMicroBatches.enabled" -> noDataBatch.toString)(body)
 
-  def config(b: SparkSession.Builder, cpus: String): SparkSession.Builder =
+  /** A streaming read of a glob path makes FileStreamSink warn "Assume
+    * no metadata directory" with a full stack trace (a glob has no
+    * _spark_metadata dir to probe); the read succeeds. Only that logger
+    * is lowered, after Spark's first log call has loaded its log4j
+    * defaults — that load resets any level set before it.
+    */
+  private object QuietGlobProbe extends org.apache.spark.internal.Logging {
+    lazy val once: Unit = {
+      log
+      org.apache.logging.log4j.core.config.Configurator.setLevel(
+        "org.apache.spark.sql.execution.streaming.sinks.FileStreamSink",
+        org.apache.logging.log4j.Level.ERROR)
+    }
+  }
+
+  def config(b: SparkSession.Builder, cpus: String): SparkSession.Builder = {
+    QuietGlobProbe.once
     b.withExtensions(new graft.plans.GraftExtensions()(_))
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
@@ -655,6 +671,23 @@ object Sessions {
       // ≤500-record put-batch files.
       .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
       .config("spark.ui.enabled", "false")
+  }
+}
+
+/** JSON string literal: quotes and escapes backslash, quote and ALL
+  * control chars (<0x20) — a tab or CR in SQL text or a path would
+  * otherwise make a consumer's json.load fail.
+  */
+private[graft] object Json {
+  def str(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 }
 
 /** Determinism helpers (SURVEY.md §2.3). The driver hash-compares our

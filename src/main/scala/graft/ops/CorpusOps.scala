@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.{Det, OSql, Q, Tables}
@@ -1124,24 +1124,30 @@ object CorpusOps {
   // no float in any ordering key.
   // ------------------------------------------------------------------
 
+  /** The (lang, w1, w2, c12) bigram count ledger of `text_bigram_kneser_ney`
+    * over a documents table — the fragment whose lead window PlanSpec
+    * pins to doc_id partitions.
+    */
+  private[graft] def bigramLedger(docs: DataFrame): DataFrame = {
+    val tok = docs.select(col("lang"), col("doc_id"),
+      posexplode(split(col("text"), " ")).as(Seq("pos", "w")))
+    val wNext = Window.partitionBy(col("doc_id")).orderBy(col("pos").asc)
+    tok.withColumn("w2", lead(col("w"), 1).over(wNext))
+      .filter(col("w2").isNotNull)
+      .select(col("lang"), col("w").as("w1"), col("w2"))
+      .groupBy("lang", "w1", "w2").agg(count(lit(1)).as("c12"))
+  }
+
   private val textBigramKneserNey = Q(
     "text_bigram_kneser_ney",
     (s, d) => {
       import s.implicits._
-      val tok = t(s, d, "documents")
-        .select($"lang", $"doc_id",
-          posexplode(split($"text", " ")).as(Seq("pos", "w")))
-      val wNext = Window.partitionBy($"doc_id").orderBy($"pos".asc)
-      val big = tok.withColumn("w2", lead($"w", 1).over(wNext))
-        .filter($"w2".isNotNull)
-        .select($"lang", $"w".as("w1"), $"w2")
       // the bigram count ledger feeds FOUR branches (ctx, cont, bt,
       // and the scored join) — checkpointed so the tokenize + lead
       // window + count collapse over the corpus runs ONCE, not once
       // per branch (r16, guide §2.4). The ledger is distinct-bigram
       // (Heaps-sublinear vocabulary), far below corpus scale.
-      val cb = big.groupBy("lang", "w1", "w2").agg(count(lit(1)).as("c12"))
-        .localCheckpoint(true)
+      val cb = bigramLedger(t(s, d, "documents")).localCheckpoint(true)
       val ctx = cb.groupBy("lang", "w1")
         .agg(sum($"c12").as("c1"), count(lit(1)).as("nf"))
       val cont = cb.groupBy("lang", "w2").agg(count(lit(1)).as("nc"))

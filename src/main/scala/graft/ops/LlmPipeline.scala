@@ -369,6 +369,15 @@ object LlmPipeline {
 
   // ---------------------------------------------- near-dup cluster (CC)
 
+  /** [[connectedComponents]]'s (v, lbl) labels, with the observables
+    * the adaptive-policy laws pin: `rounds` of min-label propagation,
+    * and whether the labels came from star `contracted`ion. A geometric
+    * frontier must finish on propagation in a few rounds; a flooding
+    * graph must hand over to contraction after exactly the probe window.
+    */
+  private[graft] final case class Components(
+      labels: DataFrame, rounds: Int, contracted: Boolean)
+
   /** Min-label connected components over a SYMMETRIC edge list (v, u)
     * — the shared CC engine behind `dedup_cluster`. ADAPTIVE between
     * two algorithms, decided by the OBSERVED propagation dynamics of
@@ -406,21 +415,8 @@ object LlmPipeline {
     * fault-prone cluster would use reliable checkpoint() to a state
     * dir instead — same plan, durable lineage cut.
     */
-  /** Rounds the last [[connectedComponents]] call spent in min-label
-    * propagation (this JVM) — with [[lastCcAlgo]], the observable the
-    * adaptive-policy laws pin: a geometric frontier must finish on
-    * propagation in a few rounds; a flooding graph must hand over to
-    * contraction after exactly the probe window.
-    */
-  @volatile private[graft] var lastCcRounds: Int = -1
-
-  /** Which algorithm produced the last call's labels: "minlabel" or
-    * "contraction".
-    */
-  @volatile private[graft] var lastCcAlgo: String = ""
-
   private[graft] def connectedComponents(
-      s: SparkSession, edgesIn: DataFrame): DataFrame = {
+      s: SparkSession, edgesIn: DataFrame): Components = {
     import s.implicits._
     val edges = edgesIn.localCheckpoint(true)
     var labels = edges.select($"v").distinct()
@@ -475,9 +471,8 @@ object LlmPipeline {
     System.err.println(s"[graft] cc: min-label rounds=$iter " +
       s"converged=$converged" +
       (if (switched) " -> starContraction" else ""))
-    lastCcRounds = iter
-    lastCcAlgo = if (switched) "contraction" else "minlabel"
-    if (converged) labels else starContraction(s, edges)
+    Components(if (switched) starContraction(s, edges) else labels,
+      iter, switched)
   }
 
   /** Large-star/small-star connected components (Kiveris et al.,
@@ -675,7 +670,7 @@ object LlmPipeline {
       // star-sparsified edges: identical components, Σ(m−1) edges per
       // bucket instead of Σm²/2 (see starEdges — the sf10 lesson)
       val edges = starEdges(s, d)
-      labeledClusters(s, connectedComponents(s, edges))
+      labeledClusters(s, connectedComponents(s, edges).labels)
     },
     Some(clusterOracleSql))
 

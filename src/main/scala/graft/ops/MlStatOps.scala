@@ -2523,9 +2523,17 @@ object MlStatOps {
           sum($"mg").as("ng"),
           sum($"mg".cast(Dec380) * (lit(2) * $"cprev" + $"m" + 1)).as("r2g"))
         .withColumn("r2d", $"r2g".cast("double"))
-        .withColumn("tq",
-          floor($"r2d" * $"r2d" / (lit(4.0) * $"ng") * lit(1e6) + lit(0.5))
-            .cast(Dec380))
+        // floor(R²/n · 1e6 + 0.5) as an exact integer, never through
+        // BIGINT: Spark's floor(double) is BIGINT and saturates at 2⁶³
+        // (sf0.1 reaches ~5e19) where DuckDB's stays DOUBLE. y − y % 1
+        // floors the non-negative double exactly; the 2³² split carries
+        // its value into DECIMAL without a double→decimal cast's
+        // shortest-repr rounding.
+        .withColumn("y", $"r2d" * $"r2d" / (lit(4.0) * $"ng") * lit(1e6) + lit(0.5))
+        .withColumn("fy", $"y" - $"y" % lit(1.0))
+        .withColumn("hi", floor($"fy" / lit(4294967296.0)))
+        .withColumn("tq", $"hi".cast(Dec380) * lit(4294967296L) +
+          ($"fy" - $"hi" * lit(4294967296.0)).cast("long"))
       val ties = led.agg(
         sum($"m".cast(Dec380) * $"m" * $"m" - $"m").as("ts3"))
       grp.agg(count(lit(1)).as("k"), sum($"ng").as("n"),

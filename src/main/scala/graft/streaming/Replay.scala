@@ -7,6 +7,38 @@ import org.apache.spark.sql.streaming.Trigger
 import scala.jdk.CollectionConverters._
 import graft.core.{Det, Ndjson, OSql, Q, Tables, TmpDirs}
 
+/** What one replay run did (A9 progress and failed records), returned
+  * by value — the per-query progress model of Structured Streaming, so
+  * two replays in one JVM never share accounting.
+  *
+  * @param sink the sink directory
+  * @param rows rows the stream's `observe` metric counted (pull-based)
+  * @param batches (batchId, numInputRows) per micro-batch in batch
+  *   order, as the run's StreamingQueryListener saw them (push-based)
+  * @param pacingMs ms the records/second/shard cap slept; 0 when off
+  * @param sinkMs wall ms (write + pacing sleep) of the rate-capped sink
+  *   across the run's epochs; 0 when the cap is off. The A7 contract is
+  *   "an epoch cannot complete faster than max-shard-records / rate": a
+  *   fast machine pays the difference as sleep, a loaded one in the
+  *   write itself, so this — not `pacingMs` — is what the contract bounds
+  * @param retried records that failed their first simulated PutRecords
+  *   attempt and landed via the retry wave; None when injection is off
+  * @param deadLettered lines the NDJSON parse rejected and the sink
+  *   dropped (a corrupt record must never become a null-keyed row in a
+  *   shard); None for a parquet archive
+  * @param phaseMs Σ `durationMs` per trigger phase (addBatch, getBatch,
+  *   walCommit, …) over the run's progress events
+  */
+final case class ReplayReport(
+    sink: String,
+    rows: Long,
+    batches: Seq[(Long, Long)],
+    pacingMs: Long,
+    sinkMs: Long,
+    retried: Option[Long],
+    deadLettered: Option[Long],
+    phaseMs: Map[String, Long])
+
 /** The reference's identity re-expressed Spark-first: replay an archived
   * event stream from object storage into a sharded streaming sink, then
   * run a watermarked event-time aggregation over the replayed stream
@@ -43,9 +75,9 @@ import graft.core.{Det, Ndjson, OSql, Q, Tables, TmpDirs}
   *
   * Progress/error reporting (A9): the replay stream `observe`s its
   * per-batch row count; [[replayArchive]] sums the observed metric over
-  * the run's progress events into [[lastReplayRows]] and logs one
-  * `[replay]` line per run — the reference's per-batch progress log,
-  * asserted loss-free in ReplayTwinSpec.
+  * the run's progress events into the [[ReplayReport]] it returns and
+  * logs one `[replay]` line per run — the reference's per-batch
+  * progress log, asserted loss-free in ReplayTwinSpec.
   *
   * Ordering contract: put_seq numbers rows in event-time order WITHIN
   * one micro-batch epoch (the epoch prefix keeps batches from merging).
@@ -62,59 +94,16 @@ import graft.core.{Det, Ndjson, OSql, Q, Tables, TmpDirs}
   */
 object Replay {
 
-  /** Observed row count of the last [[replayArchive]] run (A9 progress
-    * metric; test-asserted). Single-threaded driver contract — Verify,
-    * Bench and the specs run queries sequentially.
+  /** Run-local sink counters: the `foreachBatch` sink adds to them on
+    * the stream's thread, [[runReplay]] reads them once the query ended.
     */
-  @volatile private[graft] var lastReplayRows: Long = -1L
-
-  /** Per-micro-batch progress of the last [[replayArchive]] run as seen
-    * by the A9 [[org.apache.spark.sql.streaming.StreamingQueryListener]]:
-    * (batchId, numInputRows), batch order. The listener is the push-based
-    * A9 surface (the reference logs per-batch counts/failures); the
-    * `observe` metric above is the pull-based one — ReplayTwinSpec
-    * asserts they agree with each other and with the source count.
-    */
-  @volatile private[graft] var lastReplayProgress: Seq[(Long, Long)] = Nil
-
-  /** Total milliseconds the last [[replayArchive]] run slept enforcing
-    * the records/second/shard drain cap (A7 throughput fidelity;
-    * test-asserted). 0 when the cap is off or never bound.
-    */
-  @volatile private[graft] var lastSinkPacingMs: Long = 0L
-
-  /** Total wall milliseconds (write + pacing sleep) the rate-capped
-    * sink spent across the last run's epochs. The A7 contract is
-    * "an epoch cannot complete faster than max-shard-records / rate";
-    * a fast machine pays the difference as sleep (lastSinkPacingMs)
-    * while a slow/loaded one absorbs it in the write itself — this
-    * duration is the machine-independent quantity the contract bounds,
-    * so it is what the test asserts. 0 when the cap is off.
-    */
-  @volatile private[graft] var lastSinkDurationMs: Long = 0L
-
-  /** Records that failed their first simulated PutRecords attempt and
-    * landed via the per-record retry wave in the last [[runReplay]]
-    * run (A9 ledger; −1 = retry injection was off).
-    */
-  @volatile private[graft] var lastRetriedRecords: Long = -1L
-
-  /** Malformed-line count of the last [[replayTextGz]] run (A9 "failed
-    * records"): lines the NDJSON parse rejected and the sink dropped
-    * (dead-letter semantics — a corrupt record must never become a
-    * null-keyed row in a shard). Test-asserted on a corrupted archive.
-    */
-  @volatile private[graft] var lastParseErrors: Long = -1L
-
-  /** Raw progress events of the last [[runReplay]] run — the source
-    * front doors read their own observe metrics out of these.
-    */
-  @volatile private var lastRunProgress
-      : Seq[org.apache.spark.sql.streaming.StreamingQueryProgress] = Nil
+  private final class SinkTally {
+    val pacingMs, sinkMs, retried = new java.util.concurrent.atomic.AtomicLong
+  }
 
   /** Stage 1: single-pass (or rate-limited) replay of the archived
     * events into a sharded, batch-capped, epoch-idempotent sink
-    * directory. Returns the sink path.
+    * directory. Returns the run's report.
     *
     * @param maxFilesPerTrigger 0 = unthrottled single-pass drain (the
     *   bench/verify path); >0 = replay throttle, one epoch per file
@@ -129,7 +118,7 @@ object Replay {
     *   ProvisionedThroughputExceeded and must back off). The sink
     *   paces each epoch to its slowest shard: epoch floor =
     *   max-shard-records / rate (see [[writePutBatches]]); attained
-    *   pacing is recorded in [[lastSinkPacingMs]] (A9, test-asserted).
+    *   pacing is reported as `pacingMs` (A9, test-asserted).
     * @param sinkFault null = none; test seam invoked at the top of every
     *   sink epoch — lets ReplayTwinSpec inject a mid-epoch crash (a
     *   partially-landed put batch followed by an exception) and prove
@@ -145,7 +134,7 @@ object Replay {
       maxBytesPerTrigger: Long = 0L,
       putRecordsPerShardSec: Int = 0,
       sinkFault: (DataFrame, Long) => Unit = null,
-      failFirstAttempt: Column = null): String = {
+      failFirstAttempt: Column = null): ReplayReport = {
     // heal first: the archive may be the TIMESTAMP(NANOS) events parquet
     // and this is a public front door an external session can call
     Tables.ensureNanosConf(s)
@@ -173,9 +162,11 @@ object Replay {
     * (A2) and `from_json` parses each line — including the nested
     * `props` payload kept as a string — before the same shard/sink core
     * (A3 → A6/A7). One task per .gz file, the reference's per-file
-    * reader parallelism.
+    * reader parallelism. The report's `deadLettered` counts the lines
+    * the parse rejected.
     */
-  def replayTextGz(s: SparkSession, archiveDir: String, nShards: Int = 4): String = {
+  def replayNdjsonGz(
+      s: SparkSession, archiveDir: String, nShards: Int = 4): ReplayReport = {
     import org.apache.spark.sql.types._
     val parsed = s.readStream
       .schema(StructType(Seq(StructField("value", StringType))))
@@ -190,17 +181,18 @@ object Replay {
         sum(when(col(s"e.${Ndjson.corruptColumn}").isNotNull, 1L).otherwise(0L)).as("failed"))
       .filter(col(s"e.${Ndjson.corruptColumn}").isNull)
       .select(Ndjson.fields.map(f => col(s"e.${f.name}")): _*)
-    val out = runReplay(s, parsed, nShards)
-    lastParseErrors = lastRunProgress
-      .flatMap(p => Option(p.observedMetrics.get("parse_errors")))
-      .map(r => if (r.isNullAt(0)) 0L else r.getLong(0)).sum
-    System.err.println(s"[replay] failed_records=$lastParseErrors")
-    out
+    val r = runReplay(s, parsed, nShards, deadLetters = Some("parse_errors"))
+    System.err.println(s"[replay] failed_records=${r.deadLettered.getOrElse(0L)}")
+    r
   }
+
+  /** [[replayNdjsonGz]]'s sink path. */
+  def replayTextGz(s: SparkSession, archiveDir: String, nShards: Int = 4): String =
+    replayNdjsonGz(s, archiveDir, nShards).sink
 
   /** Source-agnostic replay core: partition-key shard routing (A6), A9
     * progress metrics (observe + listener), and the epoch-idempotent
-    * batched sink (A7). Returns the sink path.
+    * batched sink (A7). Returns the run's report.
     *
     * @param resumeDirs pass a previous run's (sink, checkpoint) pair to
     *   RESUME it: the file-source checkpoint remembers which archive
@@ -208,16 +200,17 @@ object Replay {
     *   processed and the sink is extended, never duplicated — the
     *   restart-after-crash / incremental-archive contract (tested in
     *   ReplayTwinSpec).
+    * @param deadLetters name of a one-column observe metric the source
+    *   counts rejected records with; summed into `deadLettered`.
     */
   private def runReplay(
       s: SparkSession, source: DataFrame, nShards: Int,
       resumeDirs: Option[(String, String)] = None,
       putRecordsPerShardSec: Int = 0,
       sinkFault: (DataFrame, Long) => Unit = null,
-      failFirstAttempt: Column = null): String = {
-    lastSinkPacingMs = 0L
-    lastSinkDurationMs = 0L
-    lastRetriedRecords = if (failFirstAttempt == null) -1L else 0L
+      failFirstAttempt: Column = null,
+      deadLetters: Option[String] = None): ReplayReport = {
+    val tally = new SinkTally
     val (out, ckpt) = resumeDirs.getOrElse(
       (TmpDirs.dir("replay-out"), TmpDirs.dir("replay-ckpt")))
     val stream = source
@@ -268,7 +261,7 @@ object Replay {
       .option("checkpointLocation", ckpt)
       .trigger(Trigger.AvailableNow())
       .foreachBatch(
-        writePutBatches(out, nShards, putRecordsPerShardSec, sinkFault,
+        writePutBatches(out, nShards, tally, putRecordsPerShardSec, sinkFault,
           failFirstAttempt) _)
       .start()
     expectedRun.set(q.runId)
@@ -292,16 +285,19 @@ object Replay {
     s.streams.removeListener(listener)
     val progress = progressLog.asScala.toSeq
       .filter(_.runId == q.runId).sortBy(_.batchId)
-    lastRunProgress = progress
-    // A9 progress: sum the observed per-batch row counts for this run.
-    val rows = progress
-      .flatMap(p => Option(p.observedMetrics.get("replay_progress")))
-      .map(_.getLong(0)).sum
-    lastReplayRows = rows
-    lastReplayProgress = progress.map(p => (p.batchId, p.numInputRows))
+    // A9 progress: sum an observed per-batch metric over this run
+    def observed(name: String): Long = progress
+      .flatMap(p => Option(p.observedMetrics.get(name)))
+      .map(r => if (r.isNullAt(0)) 0L else r.getLong(0)).sum
+    val rows = observed("replay_progress")
     System.err.println(
       s"[replay] rows=$rows batches=${progress.length} sink=$out")
-    out
+    ReplayReport(out, rows, progress.map(p => (p.batchId, p.numInputRows)),
+      tally.pacingMs.get, tally.sinkMs.get,
+      Option.when(failFirstAttempt != null)(tally.retried.get),
+      deadLetters.map(observed),
+      progress.flatMap(_.durationMs.asScala)
+        .groupMapReduce(_._1)(_._2.longValue)(_ + _))
   }
 
   /** The A7 put-batch sink, shared by every replay trigger mode. One
@@ -321,7 +317,7 @@ object Replay {
     * namespace, and ~9.2e6 epochs fit in a Long, far beyond any replay
     * run's batch count.
     */
-  private def writePutBatches(out: String, nShards: Int,
+  private def writePutBatches(out: String, nShards: Int, tally: SinkTally,
       putRecordsPerShardSec: Int = 0,
       sinkFault: (DataFrame, Long) => Unit = null,
       failFirstAttempt: Column = null)(
@@ -369,7 +365,7 @@ object Replay {
         land(seq.filter(!failFirstAttempt), 1)
         val failed = seq.filter(failFirstAttempt)
         land(failed, 2)
-        lastRetriedRecords += failed.count()
+        tally.retried.addAndGet(failed.count())
       }
       // A7 drain-rate cap: each Kinesis shard absorbs
       // putRecordsPerShardSec records/second — past it the producer sees
@@ -388,8 +384,8 @@ object Replay {
         val elapsedMs = (System.nanoTime() - t0) / 1000000L
         val paceMs = math.max(0L, floorMs - elapsedMs)
         if (paceMs > 0) Thread.sleep(paceMs)
-        lastSinkPacingMs += paceMs
-        lastSinkDurationMs += elapsedMs + paceMs
+        tally.pacingMs.addAndGet(paceMs)
+        tally.sinkMs.addAndGet(elapsedMs + paceMs)
         System.err.println(
           s"[replay] epoch=$epochId max_shard_rows=$maxShardRows pace_ms=$paceMs")
       }
@@ -422,7 +418,7 @@ object Replay {
     val q = stream.writeStream
       .option("checkpointLocation", ckpt)
       .trigger(Trigger.ProcessingTime(tick))
-      .foreachBatch(writePutBatches(out, nShards) _)
+      .foreachBatch(writePutBatches(out, nShards, new SinkTally) _)
       .start()
     (q, out)
   }
@@ -507,7 +503,7 @@ object Replay {
       if (Tables.eventsEmpty(s, d))
         Seq.empty[(Long, String, Long, Double)]
           .toDF("hour_start", "event_type", "cnt", "total_value")
-      else aggregateReplayed(s, replayArchive(s, s"$d/events.parquet"))
+      else aggregateReplayed(s, replayArchive(s, s"$d/events.parquet").sink)
     },
     Some("SELECT CAST(floor(epoch(date_trunc('hour', ts))) AS BIGINT) AS hour_start, " +
       "event_type, count(*) AS cnt, " + OSql.msum("value") + " AS total_value " +
@@ -532,7 +528,7 @@ object Replay {
         val out = replayArchive(s, s"$d/events.parquet", stage = df =>
           df.withColumn("k", get_json_object($"props", "$.k").cast("long"))
             .filter($"k" >= 50)
-            .withColumn("event_type_u", upper($"event_type")))
+            .withColumn("event_type_u", upper($"event_type"))).sink
         runStreamToTable(s, out) { in =>
           in.withColumn("ets", timestamp_millis($"ms"))
             .withWatermark("ets", "1 hour")
@@ -623,7 +619,7 @@ object Replay {
           nShards = shards,
           maxBytesPerTrigger = math.max(16L * 1024 * 1024, archiveBytes / 8 + 1),
           putRecordsPerShardSec = 50000,
-          failFirstAttempt = putFailureSet))
+          failFirstAttempt = putFailureSet).sink)
       }
     },
     Some("SELECT CAST(floor(epoch(date_trunc('hour', ts))) AS BIGINT) AS hour_start, " +

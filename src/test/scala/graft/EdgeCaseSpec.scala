@@ -1409,6 +1409,25 @@ class EdgeCaseSpec extends SparkSpec {
     assert(t.isNullAt(2) && t.isNullAt(3))
   }
 
+  test("kruskal-wallis stays exact when a group's quantized R²/n passes 2⁶³") {
+    // N = 60,000 distinct cents, a = the lowest third: group b's term
+    // R_b²/n_b · 1e6 ≈ 6.4e19, past BIGINT — the sf0.1 regime where a
+    // floor(double) → BIGINT quantization saturates
+    val n = 60000L
+    val dir = stageTables("events" -> spark.range(n).select(
+      $"id".as("event_id"), lit(0L).as("ts"), lit(1L).as("user_id"),
+      when($"id" < n / 3, "a").otherwise("b").as("event_type"),
+      ($"id" / 100.0).as("value"), lit("{}").as("props")))
+    // no ties (rank of id i is i + 1), so H needs no correction
+    val (ra, rb) = (1L to n).partition(_ <= n / 3)
+    val s = Seq(ra, rb).map(g => BigDecimal(g.sum).pow(2) / g.size).sum
+    val h = (12 * s / (BigDecimal(n) * (n + 1)) - 3 * (n + 1)).toDouble
+    val r = run("stat_kruskal_wallis", dir).collect().head
+    assert(r.getLong(0) === 2L && r.getLong(1) === n)
+    assert(math.abs(r.getDouble(2) - h) < 1e-5, s"H ${r.getDouble(2)} vs closed form $h")
+    assert(math.abs(r.getDouble(3) - h / (n - 1)) < 1e-6)
+  }
+
   test("mcnemar pairs per row, defaults NULL users to B=no, floors the correction") {
     // A = (v ≥ $50); B = (user mean ≥ $50).
     // u1 ($60 purchase, $10 view): mean $35 ⇒ B=no ⇒ rows → n10, n11;

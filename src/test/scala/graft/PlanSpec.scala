@@ -713,8 +713,8 @@ class PlanSpec extends SparkSpec {
     // inside the materialization job and the FINAL plan consumes the
     // ExistingRDD ledger. The global-order pin therefore has two parts:
     // the final plan must feed from the materialized ledger and carry
-    // no window at all, and the ledger-producing fragment (re-derived
-    // here exactly as the query builds it) must partition its lead
+    // no window at all, and the ledger-producing fragment (the same
+    // `bigramLedger` the query checkpoints) must partition its lead
     // window by doc_id.
     val plan = executedPlan("text_bigram_kneser_ney")
     assert(plan.contains("Scan ExistingRDD"),
@@ -724,16 +724,8 @@ class PlanSpec extends SparkSpec {
       "the token lead window must live in the ledger job, not re-run " +
         "over the final plan (the remaining windows are the per-lang " +
         "top-10 rank, keyed by lang)")
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.functions._
-    val tok = spark.read.parquet(s"$sf/documents.parquet")
-      .select(col("lang"), col("doc_id"),
-        posexplode(split(col("text"), " ")).as(Seq("pos", "w")))
-    val big = tok.withColumn("w2",
-      lead(col("w"), 1).over(Window.partitionBy(col("doc_id"))
-        .orderBy(col("pos").asc)))
-    val ledgerPlan = big.filter(col("w2").isNotNull)
-      .groupBy("lang", "w", "w2").count()
+    val ledgerPlan = graft.ops.CorpusOps
+      .bigramLedger(spark.read.parquet(s"$sf/documents.parquet"))
       .queryExecution.executedPlan.toString
     val leadWindows = ledgerPlan.linesIterator
       .filter(l => l.contains("Window ") && l.contains("lead(")).toSeq

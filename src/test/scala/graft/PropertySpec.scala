@@ -319,12 +319,11 @@ class PropertySpec extends SparkSpec {
     // produce the exact component minimum, not fail or split the chain
     val pairs = (0L until 39L).map(i => (i, i + 1))
     val sym = pairs.flatMap { case (a, b) => Seq((a, b), (b, a)) }
-    val labels = graft.ops.LlmPipeline
-      .connectedComponents(spark, sym.toDF("v", "u"))
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
+    val cc = graft.ops.LlmPipeline.connectedComponents(spark, sym.toDF("v", "u"))
+    val labels = cc.labels.collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(labels.length === 40)
     assert(labels.forall(_._2 == 0L), "every chain vertex joins component 0")
-    assert(graft.ops.LlmPipeline.lastCcAlgo === "contraction",
+    assert(cc.contracted,
       "a flooding frontier must commit to contraction")
   }
 
@@ -340,15 +339,14 @@ class PropertySpec extends SparkSpec {
     for (d <- Seq(64, 256)) {
       val pairs = (0L until d.toLong).map(i => (i, i + 1))
       val sym = pairs.flatMap { case (a, b) => Seq((a, b), (b, a)) }
-      val labels = graft.ops.LlmPipeline
-        .connectedComponents(spark, sym.toDF("v", "u"))
-        .collect().map(r => (r.getLong(0), r.getLong(1)))
+      val cc = graft.ops.LlmPipeline.connectedComponents(spark, sym.toDF("v", "u"))
+      val labels = cc.labels.collect().map(r => (r.getLong(0), r.getLong(1)))
       assert(labels.length === d + 1)
       assert(labels.forall(_._2 == 0L), s"chain of diameter $d joins component 0")
-      assert(graft.ops.LlmPipeline.lastCcAlgo === "contraction",
+      assert(cc.contracted,
         s"diameter-$d chain floods; the probe must commit to contraction")
-      assert(graft.ops.LlmPipeline.lastCcRounds <= 2,
-        s"probe overran: ${graft.ops.LlmPipeline.lastCcRounds} rounds " +
+      assert(cc.rounds <= 2,
+        s"probe overran: ${cc.rounds} rounds " +
           "of propagation before the switch")
     }
     // the geometric regime: disjoint hub stars (the dedup quasi-clique
@@ -358,15 +356,15 @@ class PropertySpec extends SparkSpec {
       (1L to 5L).map(i => (h * 100, h * 100 + i))
     }
     val symStars = stars.flatMap { case (a, b) => Seq((a, b), (b, a)) }
-    val starLabels = graft.ops.LlmPipeline
+    val starCc = graft.ops.LlmPipeline
       .connectedComponents(spark, symStars.toDF("v", "u"))
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
+    val starLabels = starCc.labels.collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(starLabels.length === 240)
     assert(starLabels.forall { case (v, l) => l == (v / 100) * 100 })
-    assert(graft.ops.LlmPipeline.lastCcAlgo === "minlabel",
+    assert(!starCc.contracted,
       "a geometric frontier must stay on min-label propagation")
-    assert(graft.ops.LlmPipeline.lastCcRounds <= 4,
-      s"quasi-clique graph took ${graft.ops.LlmPipeline.lastCcRounds} rounds")
+    assert(starCc.rounds <= 4,
+      s"quasi-clique graph took ${starCc.rounds} rounds")
   }
 
   test("set-algebra cardinality laws hold against the raw tables") {
@@ -945,7 +943,7 @@ class PropertySpec extends SparkSpec {
         .repartition(files).write.mode("overwrite").parquet(s"$dir/events.parquet")
       val throttled = graft.streaming.Replay.aggregateReplayed(spark,
         graft.streaming.Replay.replayArchive(
-          spark, s"$dir/events.parquet", maxFilesPerTrigger = mft))
+          spark, s"$dir/events.parquet", maxFilesPerTrigger = mft).sink)
         .collect().toSeq
       val batch = run("stream_tumbling", dir).collect().toSeq
       assert(throttled === batch,
@@ -995,17 +993,17 @@ class PropertySpec extends SparkSpec {
     Gen.listOfN(4, g).sample.getOrElse(Nil).foreach { case (rows, salt, m, shards) =>
       val dir = stageArchive(rows)
       val fail = pmod(xxhash64(col("event_id") + lit(salt)), lit(m)) === 0
-      val out = graft.streaming.Replay.replayArchive(
+      val report = graft.streaming.Replay.replayArchive(
         spark, s"$dir/events.parquet", nShards = shards,
         putRecordsPerShardSec = 50000, failFirstAttempt = fail)
-      val live = graft.streaming.Replay.aggregateReplayed(spark, out)
+      val live = graft.streaming.Replay.aggregateReplayed(spark, report.sink)
         .collect().toSeq
       val batch = run("stream_tumbling", dir).collect().toSeq
       assert(live === batch,
         s"retried replay (salt=$salt m=$m shards=$shards) diverged from the batch twin")
       val expected = spark.read.parquet(s"$dir/events.parquet")
         .filter(fail).count()
-      assert(graft.streaming.Replay.lastRetriedRecords === expected,
+      assert(report.retried === Some(expected),
         s"retry wave must carry exactly the failure set (m=$m)")
     }
   }
@@ -1034,7 +1032,7 @@ class PropertySpec extends SparkSpec {
           graft.streaming.Replay.aggregateReplayed(spark,
             graft.streaming.Replay.replayArchive(
               spark, s"$dir/events.parquet", nShards = shards,
-              maxFilesPerTrigger = mft, failFirstAttempt = fail))
+              maxFilesPerTrigger = mft, failFirstAttempt = fail).sink)
             .collect().toSeq
         val a = agg(s1)
         assert(a === agg(s2),

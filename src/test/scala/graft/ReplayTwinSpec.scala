@@ -29,10 +29,10 @@ class ReplayTwinSpec extends SparkSpec {
     java.nio.file.Files.write(
       java.nio.file.Paths.get(arch, "garbage.txt"),
       "not json at all\n{\n{\"event_id\": oops}\n".getBytes("UTF-8"))
-    val out = Replay.replayTextGz(spark, arch)
+    val r = Replay.replayNdjsonGz(spark, arch)
     val good = spark.read.parquet(s"$sf/events.parquet").count()
-    assert(Replay.lastParseErrors === 3L)
-    val sunk = spark.read.parquet(out)
+    assert(r.deadLettered === Some(3L))
+    val sunk = spark.read.parquet(r.sink)
     assert(sunk.count() === good)
     assert(sunk.filter(col("user_id").isNull).isEmpty)
   }
@@ -168,7 +168,8 @@ class ReplayTwinSpec extends SparkSpec {
 
   test("replay sink respects the shard layout and the 500-record put-batch cap") {
     import org.apache.spark.sql.functions._
-    val out = Replay.replayArchive(spark, s"$sf/events.parquet", nShards = 4)
+    val report = Replay.replayArchive(spark, s"$sf/events.parquet", nShards = 4)
+    val out = report.sink
     val files = new java.io.File(out).listFiles().filter(_.getName.startsWith("shard="))
     assert(files.nonEmpty && files.forall(f => (0 until 4).exists(i => f.getName == s"shard=$i")))
     val replayedDf = spark.read.parquet(out)
@@ -194,15 +195,48 @@ class ReplayTwinSpec extends SparkSpec {
     // metric agrees with what actually landed in the sink
     val source = spark.read.parquet(s"$sf/events.parquet").count()
     assert(replayedDf.count() === source)
-    assert(Replay.lastReplayRows === source)
+    assert(report.rows === source)
     // the push-based A9 listener saw the same rows as the observe metric
-    assert(Replay.lastReplayProgress.map(_._2).sum === source)
+    assert(report.batches.map(_._2).sum === source)
+    // a parquet archive has no parse step, so nothing is dead-lettered
+    assert(report.deadLettered === None)
     // shard routing is a pure function of the partition key
     val byKey = replayedDf
       .select("user_id", "shard").distinct()
       .groupBy("user_id").count()
       .filter(col("count") > 1)
     assert(byKey.isEmpty)
+  }
+
+  test("two concurrent replays in one session each report their own run") {
+    import org.apache.spark.sql.functions._
+    import scala.jdk.CollectionConverters._
+    // archives of different sizes: a report that took in the other
+    // run's progress events could not match its own archive's count
+    val src = spark.read.parquet(s"$sf/events.parquet")
+    val small = graft.core.TmpDirs.dir("race-small")
+    src.filter(col("event_id") % 3 === 0).write.mode("overwrite").parquet(small)
+    val big = graft.core.TmpDirs.dir("race-big")
+    src.repartition(3).write.mode("overwrite").parquet(big)
+    val counts = Seq(small, big).map(d => spark.read.parquet(d).count())
+    assert(counts.distinct.size === 2)
+    // both threads start their replay together; one file per epoch keeps
+    // each run going for several micro-batches so the two overlap
+    val barrier = new java.util.concurrent.CyclicBarrier(2)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    val reports = try pool.invokeAll(Seq(small, big).map { d =>
+        val c: java.util.concurrent.Callable[graft.streaming.ReplayReport] = () => {
+          barrier.await()
+          Replay.replayArchive(spark, d, nShards = 4, maxFilesPerTrigger = 1)
+        }
+        c
+      }.asJava).asScala.map(_.get).toSeq
+      finally pool.shutdown()
+    reports.zip(counts).foreach { case (r, n) =>
+      assert(r.rows === n)
+      assert(r.batches.map(_._2).sum === n)
+      assert(spark.read.parquet(r.sink).count() === n)
+    }
   }
 
   test("throttled streaming CDC apply (multi-epoch bucket-scoped merge) equals the batch MERGE") {
@@ -273,7 +307,7 @@ class ReplayTwinSpec extends SparkSpec {
     val weird = new java.io.File(dir, "events,2024[v1].parquet")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/events.parquet"), weird.toPath)
-    val out = Replay.replayArchive(spark, weird.getPath)
+    val out = Replay.replayArchive(spark, weird.getPath).sink
     assert(spark.read.parquet(out).count() ===
       spark.read.parquet(s"$sf/events.parquet").count())
   }
@@ -294,15 +328,15 @@ class ReplayTwinSpec extends SparkSpec {
     val out = graft.core.TmpDirs.dir("resume-out")
     val ckpt = graft.core.TmpDirs.dir("resume-ckpt")
     val dirs = Some((out, ckpt))
-    Replay.replayArchive(spark, arch.getPath, nShards = 4, resumeDirs = dirs)
+    val leg1Rows =
+      Replay.replayArchive(spark, arch.getPath, nShards = 4, resumeDirs = dirs).rows
     val afterLeg1 = spark.read.parquet(out).count()
-    val leg1Rows = Replay.lastReplayRows
     assert(afterLeg1 > 0 && afterLeg1 === leg1Rows)
     // the "crashed process restarts after the archive grew" leg: same
     // checkpoint + sink, two new files — only they must replay
     reveal(parts(1)); reveal(parts(2))
-    Replay.replayArchive(spark, arch.getPath, nShards = 4, resumeDirs = dirs)
-    assert(Replay.lastReplayRows === spark.read.parquet(full).count() - leg1Rows,
+    val leg2 = Replay.replayArchive(spark, arch.getPath, nShards = 4, resumeDirs = dirs)
+    assert(leg2.rows === spark.read.parquet(full).count() - leg1Rows,
       "second leg must process exactly the two new files")
     val sunk = spark.read.parquet(out)
     // loss-free AND dup-free across the restart
@@ -319,16 +353,17 @@ class ReplayTwinSpec extends SparkSpec {
     val src = spark.read.parquet(s"$sf/events.parquet")
     val archive = graft.core.TmpDirs.dir("twin-archive")
     src.repartition(3).write.mode("overwrite").parquet(archive)
-    val out = Replay.replayArchive(spark, archive, nShards = 4, maxFilesPerTrigger = 1)
+    val report = Replay.replayArchive(spark, archive, nShards = 4, maxFilesPerTrigger = 1)
+    val out = report.sink
     val replayed = spark.read.parquet(out)
     assert(replayed.select("epoch").distinct().count() > 1)
     // loss-free across epochs, and A9 progress saw every row
     assert(replayed.count() === src.count())
-    assert(Replay.lastReplayRows === src.count())
+    assert(report.rows === src.count())
     // multi-epoch run: the A9 listener logged one entry per micro-batch
     // and collectively saw every row
-    assert(Replay.lastReplayProgress.map(_._2).sum === src.count())
-    assert(Replay.lastReplayProgress.count(_._2 > 0) > 1)
+    assert(report.batches.map(_._2).sum === src.count())
+    assert(report.batches.count(_._2 > 0) > 1)
     // put cap holds per epoch-prefixed put_seq
     assert(replayed.groupBy("shard", "put_seq").count().filter(col("count") > 500).isEmpty)
     // ordering contract is scoped to (epoch, shard): within one epoch a
@@ -406,8 +441,7 @@ class ReplayTwinSpec extends SparkSpec {
     val archive = graft.core.TmpDirs.dir("rate-archive")
     src.repartition(2).write.mode("overwrite").parquet(archive)
     // unthrottled control: the cap off ⇒ zero pacing recorded
-    Replay.replayArchive(spark, archive, nShards = 4)
-    assert(Replay.lastSinkPacingMs === 0L)
+    assert(Replay.replayArchive(spark, archive, nShards = 4).pacingMs === 0L)
     // rate low enough that pacing dominates sink write time: per shard
     // ≈ n/4 records at 25 rec/s/shard ⇒ every epoch must last
     // ≥ max-shard-records/25 s, write time included.
@@ -416,9 +450,9 @@ class ReplayTwinSpec extends SparkSpec {
     // epochs, so pacing provably accumulates ACROSS epochs.
     val bytesCap = new java.io.File(archive).listFiles()
       .filter(_.getName.endsWith(".parquet")).map(_.length()).min
-    val out = Replay.replayArchive(spark, archive, nShards = 4,
+    val capped = Replay.replayArchive(spark, archive, nShards = 4,
       maxBytesPerTrigger = bytesCap, putRecordsPerShardSec = 25)
-    val sunk = spark.read.parquet(out)
+    val sunk = spark.read.parquet(capped.sink)
     assert(sunk.select("epoch").distinct().count() > 1,
       "bytes-per-trigger must split the archive into multiple epochs")
     // loss-free and dup-free under both throttles
@@ -430,12 +464,12 @@ class ReplayTwinSpec extends SparkSpec {
     // the whole-run floor (n/4)/rate regardless of how much of each
     // epoch the write itself absorbed — machine-speed-independent.
     val floorMs = (n / 4) * 1000L / 25
-    assert(Replay.lastSinkDurationMs >= floorMs,
-      s"rate-capped sink ran ${Replay.lastSinkDurationMs}ms; the drain " +
+    assert(capped.sinkMs >= floorMs,
+      s"rate-capped sink ran ${capped.sinkMs}ms; the drain " +
         s"cap requires >= ${floorMs}ms")
     // and at this rate the floor is far above any realistic write time,
     // so the sleep path itself must have fired
-    assert(Replay.lastSinkPacingMs > 0L,
+    assert(capped.pacingMs > 0L,
       "the pacing sleep never fired at a rate the write cannot absorb")
   }
 
@@ -491,11 +525,11 @@ class ReplayTwinSpec extends SparkSpec {
     val cfg = ReplayCli.parseArgs(Seq(
       "--source", s"$sf/events.parquet", "--sink", sink,
       "--shards", "4", "--records-per-sec", "100000"))
-    val out = ReplayCli.run(spark, cfg)
+    val out = ReplayCli.run(spark, cfg).sink
     assert(out === sink, "the CLI must honor --sink")
     val cli = spark.read.parquet(out)
     val ref = spark.read.parquet(
-      Replay.replayArchive(spark, s"$sf/events.parquet", nShards = 4))
+      Replay.replayArchive(spark, s"$sf/events.parquet", nShards = 4).sink)
     def canon(df: org.apache.spark.sql.DataFrame) =
       df.select("event_id", "shard", "epoch", "put_seq")
         .collect().map(_.toSeq).sortBy(_.mkString("|")).toSeq
@@ -511,7 +545,7 @@ class ReplayTwinSpec extends SparkSpec {
     }
     val mid = lo + (hi - lo) / 2
     val scoped = ReplayCli.run(spark, ReplayCli.parseArgs(Seq(
-      "--source", s"$sf/events.parquet", "--from", lo.toString, "--to", mid.toString)))
+      "--source", s"$sf/events.parquet", "--from", lo.toString, "--to", mid.toString))).sink
     val expected = ms.filter(col("ms") >= lo && col("ms") < mid).count()
     assert(spark.read.parquet(scoped).count() === expected)
     // flag parsing: ISO dates read as UTC; unknown flags refuse loudly
@@ -523,6 +557,27 @@ class ReplayTwinSpec extends SparkSpec {
     }
   }
 
+  test("ReplayCli prints its report as one valid JSON line, sink path escaped") {
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    // a --sink dir whose name carries a quote and a tab
+    val sink = new java.io.File(graft.core.TmpDirs.dir("cli-json"), "q\"t\tx").getPath
+    val line = ReplayCli.json(ReplayCli.run(spark, ReplayCli.parseArgs(Seq(
+      "--source", s"$sf/events.parquet", "--sink", sink))))
+    assert(!line.contains('\n') && !line.contains('\t') && line.contains("q\\\"t\\tx"), line)
+    val js = mapper.readTree(line)
+    assert(js.get("sink").asText() === sink)
+    assert(js.get("rows").asLong() === spark.read.parquet(s"$sf/events.parquet").count())
+    assert(js.get("retried_records").isNull && js.get("dead_lettered").isNull)
+    assert(js.get("phase_ms").has("addBatch"))
+    // the NDJSON door: dead_lettered counts the injected bad lines
+    val arch = graft.core.Ndjson.stageGz(spark, sf, "cli-corrupt-archive")
+    java.nio.file.Files.write(java.nio.file.Paths.get(arch, "garbage.txt"),
+      "not json\n{\"event_id\": oops}\n".getBytes("UTF-8"))
+    val gz = mapper.readTree(ReplayCli.json(ReplayCli.run(spark, ReplayCli.parseArgs(Seq(
+      "--source", arch, "--format", "ndjson-gz")))))
+    assert(gz.get("dead_lettered").asLong() === 2L)
+  }
+
   test("CLI --transform-regex rewrites in-stream exactly like the batch transform (A5)") {
     import org.apache.spark.sql.functions._
     // the same regexp_replace machinery the declared transform_rewrite
@@ -532,7 +587,7 @@ class ReplayTwinSpec extends SparkSpec {
     val out = ReplayCli.run(spark, ReplayCli.parseArgs(Seq(
       "--source", s"$sf/events.parquet", "--shards", "4",
       "--transform-regex", "\": \"", "--transform-repl", "\":_\"",
-      "--transform-col", "props")))
+      "--transform-col", "props"))).sink
     val cli = spark.read.parquet(out)
       .select("event_id", "props").collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
@@ -555,15 +610,15 @@ class ReplayTwinSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     // leg 1: clean run — no injection, everything lands on attempt 1
     val outPlain = Replay.replayArchive(spark, s"$sf/events.parquet", nShards = 4)
-    val plain = spark.read.parquet(outPlain)
-    assert(Replay.lastRetriedRecords === -1L, "injection off must report the sentinel")
+    val plain = spark.read.parquet(outPlain.sink)
+    assert(outPlain.retried === None, "injection off must report no retry count")
     // leg 2: ~1/8 of records fail their first simulated PutRecords
     // attempt and must land via the retry wave
     val outInj = Replay.replayArchive(spark, s"$sf/events.parquet", nShards = 4,
       failFirstAttempt = Replay.putFailureSet)
-    val injected = spark.read.parquet(outInj)
-    assert(Replay.lastRetriedRecords > 0, "the failure set must be non-empty at sf0.001")
-    assert(injected.filter(col("attempt") === 2).count() === Replay.lastRetriedRecords)
+    val injected = spark.read.parquet(outInj.sink)
+    assert(outInj.retried.exists(_ > 0), "the failure set must be non-empty at sf0.001")
+    assert(outInj.retried === Some(injected.filter(col("attempt") === 2).count()))
     // the law: retrying ONLY the failed records changes nothing the
     // consumer can see — same records, same shards, same put batches
     val cols = Seq("event_id", "shard", "epoch", "put_seq", "ms").map(col)
