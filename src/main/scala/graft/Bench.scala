@@ -146,17 +146,11 @@ object Bench {
     val reps = sys.env.get("SPARK_GRAFT_REPS")
       .flatMap(_.toIntOption).filter(_ > 0).getOrElse(1)
     val errors = scala.collection.mutable.ArrayBuffer[String]()
-    // per-query streaming-lifecycle count (VERDICT r14 ask #4): each
-    // lifecycle carries a Spark-fixed floor a long-lived deployment
-    // pays once per query lifetime — the record splits each streaming
-    // key into (lifecycle_floor, operator_sec) so the operator share
-    // is the tracked number. QueryStartedEvent is delivered
-    // synchronously at start, so the delta around fn() is exact.
-    graft.core.StreamMeter.ensure(spark)
-    val lifecyclesByQuery = scala.collection.mutable.LinkedHashMap[String, Long]()
-    val results = selected.map { case (name, fn) =>
-      val lcBefore = graft.core.StreamMeter.lifecycles
-      val times = (1 to reps).map { _ =>
+    // The layer profile: each rep's build (`fn`) and action (`.count()`)
+    // run under their own tags, read once after the whole run.
+    val profile = graft.core.Profile(spark)
+    val runs = selected.map { case (name, fn) =>
+      val times = (1 to reps).map { rep =>
         // Cold index builds (IndexCache) that fire inside this query are
         // timed separately and SUBTRACTED from its number: the build is
         // a once-per-corpus artifact amortized over the whole family, so
@@ -164,10 +158,11 @@ object Bench {
         // stays fully visible in the emitted `index_staging` map.
         val stagedBefore = graft.core.IndexCache.stagingLog.keySet
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch {
+        val (buildMs, actionMs) = try profile.run(s"$name#$rep")(fn(spark, sfDir)) catch {
           case t: Throwable =>
             if (!errors.contains(name)) errors += name
             System.err.println(s"[bench] ERROR $name: ${t.getClass.getName}: ${t.getMessage}")
+            (0.0, 0.0)
         }
         val raw = (System.nanoTime() - t0) / 1e9
         val stagedHere = graft.core.IndexCache.stagingLog
@@ -177,13 +172,14 @@ object Bench {
         // by leftover executor memory pressure
         spark.catalog.clearCache()
         System.gc()
-        dt
+        (dt, s"$name#$rep", buildMs, actionMs)
       }
-      // lifecycles per REP (the timing is per-rep too)
-      val lcDelta = (graft.core.StreamMeter.lifecycles - lcBefore) / reps
-      if (lcDelta > 0) lifecyclesByQuery(name) = lcDelta
-      name -> (if (errors.contains(name)) -times.min else times.min)
+      val (dt, tag, buildMs, actionMs) = times.minBy(_._1)
+      (name, if (errors.contains(name)) -dt else dt, tag, buildMs, actionMs)
     }
+    profile.drain()
+    val profiles = runs.map { case (k, v, tag, b, a) => (k, v, profile.of(tag, b, a)) }
+    val results = profiles.map(r => r._1 -> r._2)
     // errored queries don't contribute to the comparable total
     val total = results.collect { case (_, v) if v >= 0 => v }.sum
     val load = s"$loadStart ${loadavg()}" // 1-min loadavg at start + end
@@ -191,26 +187,33 @@ object Bench {
     // (the stdout line below may fold cheap queries into `_rest`).
     val errJson = errors.sorted.map(Json.str).mkString("[", ",", "]")
     val fullQs = results.map { case (k, v) => Json.str(k) + ":" + v }.mkString("{", ",", "}")
+    val profileJson = profiles.map { case (k, _, p) => Json.str(k) + ":" + p.json }
+      .mkString("{", ",", "}")
     // cold index builds, attributed to their artifact key instead of
     // whichever query ran first
     val staging = graft.core.IndexCache.stagingLog.toSeq.sortBy(_._1)
     val stagingJson = staging
       .map { case (k, v) => Json.str(k) + ":" + v }.mkString("{", ",", "}")
     val stagingTotal = staging.map(_._2).sum
-    // streaming lifecycle/operator split: floor = lifecycles × the
-    // StreamCostProbe-measured per-lifecycle machinery cost (0.5 s —
-    // the conservative LOWER end of the measured 0.52–0.96 s range, so
-    // operator_sec is an upper bound on true operator work)
+    // Streaming lifecycle/operator split, per key that started a
+    // streaming query. `lifecycle_floor` charges an assumed 0.5 s per
+    // lifecycle, the lower end of the 0.52–0.96 s once measured per
+    // query at 32 cores, so `operator_sec` is an upper bound on operator
+    // work; ScaleProofSpec's law reads it. `trigger_ms` is the measured
+    // Σ triggerExecution and `lifecycle_ms` the wall time outside it.
     val LifecycleFloorSec = 0.5
-    val streamSplitJson = lifecyclesByQuery.toSeq.sortBy(_._1).map {
-      case (q, lc) =>
-        val t = results.collectFirst { case (`q`, v) if v >= 0 => v }.getOrElse(0.0)
-        val floor = lc * LifecycleFloorSec
-        Json.str(q) + ":{\"lifecycles\":" + lc +
+    val streamSplitJson = profiles.collect {
+      case (q, v, p) if p.lifecycles > 0 =>
+        val t = math.max(0.0, v) // an errored key's time is negated
+        val floor = p.lifecycles * LifecycleFloorSec
+        val trigger = p.triggerMs.getOrElse("triggerExecution", 0L)
+        Json.str(q) + ":{\"lifecycles\":" + p.lifecycles +
           ",\"lifecycle_floor\":" + fmt(floor) +
-          ",\"operator_sec\":" + fmt(math.max(0.0, t - floor)) + "}"
+          ",\"operator_sec\":" + fmt(math.max(0.0, t - floor)) +
+          ",\"trigger_ms\":" + trigger +
+          ",\"lifecycle_ms\":" + fmt(t * 1000 - trigger) + "}"
     }.mkString("{", ",", "}")
-    val full = s"""{"metric":"total","value":$total,"unit":"sec","cpus":$cpus,"reps":$reps,"load":"$load","errors":$errJson,"index_staging_sec":$stagingTotal,"total_with_staging":${total + stagingTotal},"index_staging":$stagingJson,"stream_split":$streamSplitJson,"queries":$fullQs,"sf":${Json.str(sfDir)}}"""
+    val full = s"""{"metric":"total","value":$total,"unit":"sec","cpus":$cpus,"reps":$reps,"load":"$load","errors":$errJson,"index_staging_sec":$stagingTotal,"total_with_staging":${total + stagingTotal},"index_staging":$stagingJson,"stream_split":$streamSplitJson,"queries":$fullQs,"profile":$profileJson,"sf":${Json.str(sfDir)}}"""
     val fullPath = recordPath(cpus, sfDir, only.isDefined)
     try {
       java.nio.file.Files.write(java.nio.file.Paths.get(fullPath),

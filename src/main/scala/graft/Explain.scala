@@ -1,27 +1,31 @@
 package graft
 import org.apache.spark.sql.SparkSession
 
-/** Plan-inspection utility: prints the formatted physical plan (and
-  * optionally times) one named query from SparkEntry. Usage:
-  *   runMain graft.Explain <queryKey> [sfDir] [time]
+/** Plan-inspection utility: prints the formatted physical plan of one
+  * named query from SparkEntry. Usage:
+  *   runMain graft.Explain <queryKey> [sfDir] [profile]
+  * With `profile` it runs the key cold, then warm (the warm run is what
+  * Bench, which warms the session first, sees), and prints each run's
+  * layer profile ([[graft.core.KeyProfile]]) as one JSON line.
   */
 object Explain {
   def main(args: Array[String]): Unit = {
     val key = args(0)
-    val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
+    val sfDir = args.drop(1).find(_ != "profile").getOrElse("/root/testdata/sf0.1")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = graft.core.Sessions.config(
       SparkSession.builder().master(s"local[$cpus]"), cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val df = SparkEntry.queries(key)(spark, sfDir)
-    df.explain("formatted")
-    if (args.contains("time")) {
-      // cold run then warm run — the warm number is what Bench (which
-      // warms the session first) will see.
-      (1 to 2).foreach { i =>
-        val t0 = System.nanoTime()
-        val n = SparkEntry.queries(key)(spark, sfDir).count()
-        println(f"[explain] $key run$i: $n rows in ${(System.nanoTime() - t0) / 1e9}%.2f s")
+    val fn = SparkEntry.queries(key)
+    val profile = Option.when(args.contains("profile"))(graft.core.Profile(spark))
+    val runs = profile.toSeq.flatMap(p =>
+      Seq("cold", "warm").map(run => run -> p.run(run)(fn(spark, sfDir))))
+    fn(spark, sfDir).explain("formatted")
+    profile.foreach { p =>
+      p.drain()
+      runs.foreach { case (run, (buildMs, actionMs)) =>
+        println(s"""{"key":${graft.core.Json.str(key)},"run":"$run","profile":""" +
+          p.of(run, buildMs, actionMs).json + "}")
       }
     }
     spark.stop()

@@ -36,6 +36,9 @@ import graft.streaming.{Replay, ReplayReport}
   *   --retry-injection    simulate per-record first-attempt put
   *                        failures (retried within the batch)
   *
+  * With --format ndjson-gz only --sink and --shards apply; the other
+  * flags are refused.
+  *
   * The time-range flags filter on the same derived `ms` every verified
   * query uses, so a CLI replay of [from, to) equals the
   * `replay_time_range` key's scoped run by construction.
@@ -135,12 +138,16 @@ object ReplayCli {
     val fail = if (c.retryInjection) Replay.putFailureSet else null
     c.format match {
       case "ndjson-gz" =>
-        // the NDJSON front door parses its fixed record schema; range
-        // and predicate flags are not wired for it (the reference
-        // prefixes-then-streams raw objects the same way)
-        require(c.fromMs.isEmpty && c.toMs.isEmpty && c.filter.isEmpty,
-          "--from/--to/--filter require --format parquet")
-        Replay.replayNdjsonGz(s, c.source, c.shards)
+        // the NDJSON front door parses its fixed record schema; range,
+        // predicate, transform and throttle flags are not wired for it
+        // (the reference prefixes-then-streams raw objects the same way)
+        require(c.fromMs.isEmpty && c.toMs.isEmpty && c.filter.isEmpty &&
+          c.transformRegex.isEmpty && c.recordsPerSec == 0 &&
+          c.maxFilesPerTrigger == 0 && c.maxBytesPerTrigger == 0 && !c.retryInjection,
+          "--from/--to/--filter/--transform-*/--records-per-sec/" +
+            "--max-files-per-trigger/--max-bytes-per-trigger/--retry-injection " +
+            "require --format parquet")
+        Replay.replayNdjsonGz(s, c.source, c.shards, resume)
       case _ =>
         Replay.replayArchive(s, c.source, c.shards,
           maxFilesPerTrigger = c.maxFilesPerTrigger,

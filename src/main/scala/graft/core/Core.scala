@@ -519,37 +519,6 @@ object IndexCache {
   }
 }
 
-/** Per-JVM streaming-query lifecycle counter. Every streaming key pays
-  * a Spark-fixed per-query-lifetime cost (start/plan/checkpoint/stop —
-  * measured 0.2–1.0 s per lifecycle by StreamCostProbe) that a
-  * long-lived deployment pays once per query LIFETIME, not per drain.
-  * Bench diffs this counter around each key so the emitted record can
-  * split a streaming key's time into (lifecycle floor, operator share)
-  * — the number to watch round-over-round is the operator share.
-  */
-object StreamMeter {
-  private val n = new java.util.concurrent.atomic.AtomicLong()
-  private val registered =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[SparkSession]()
-
-  /** Register the counting listener once per session. */
-  def ensure(s: SparkSession): Unit = if (registered.add(s)) {
-    import org.apache.spark.sql.streaming.StreamingQueryListener
-    s.streams.addListener(new StreamingQueryListener {
-      override def onQueryStarted(
-          e: StreamingQueryListener.QueryStartedEvent): Unit = {
-        n.incrementAndGet(); ()
-      }
-      override def onQueryProgress(
-          e: StreamingQueryListener.QueryProgressEvent): Unit = ()
-      override def onQueryTerminated(
-          e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-    })
-  }
-
-  def lifecycles: Long = n.get()
-}
-
 /** Session-build configuration shared by Verify / Bench / tests so every
   * entry point constructs an identical engine session.
   */
@@ -567,10 +536,11 @@ object Sessions {
     * deployment parameter — size it to sustained state volume (at 100 TB
     * you raise it into the hundreds so each store's keyspace fits in
     * executor memory). The default of 4 suits up to ~10^6 state keys —
-    * the bench-SF families hold ≤10^3 (hour×type windows, user ids) and
-    * the StreamCostProbe measures ~0.1–0.2 s of per-query store
-    * overhead RECLAIMED per halving, so the run-to-completion shape
-    * stops paying for shards its state never fills.
+    * the bench-SF families hold ≤10^3 (hour×type windows, user ids),
+    * and each halving of the shard count was once measured to reclaim
+    * ~0.1–0.2 s of per-query store overhead at 32 cores, so the
+    * run-to-completion shape stops paying for shards its state never
+    * fills.
     */
   val StreamStateShards: Int = {
     // Validate here: a bare .toInt in object init would surface a typo'd

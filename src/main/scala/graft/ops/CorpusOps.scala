@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.core.{Det, OSql, Q, Tables}
+import graft.core.{Det, Mat, OSql, Q, Tables}
 
 /** Corpus-preparation operators beyond cleaning/dedup: PII redaction and
   * weighted source mixing — the two passes that sit between a cleaned
@@ -608,14 +608,16 @@ object CorpusOps {
         .withColumn("w2", lead($"w", 1).over(wNext))
         .filter($"w2".isNotNull)
         .select($"doc_id", $"w".as("w1"), $"w2")
-      // vocabulary-bounded count ledgers, checkpointed: cBig also
+      // vocabulary-bounded count ledgers, materialized: cBig also
       // feeds the scoring join and cUni both the join and the V
       // scalar — left lazy each consumer re-ran its own tokenize
-      // pass over the corpus (r16, guide §2.4)
-      val cBig = big.groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
-        .localCheckpoint(true)
-      val cUni = tok.groupBy("w").agg(count(lit(1)).as("c1"))
-        .localCheckpoint(true)
+      // pass over the corpus (r16, guide §2.4); the vocabulary grows
+      // with the corpus, so the cut is size-gated
+      val docs = s"$d/documents.parquet"
+      val cBig = Mat.gated(s, big.groupBy("w1", "w2").agg(count(lit(1)).as("c12")),
+        "bigram-pairs", docs)
+      val cUni = Mat.gated(s, tok.groupBy("w").agg(count(lit(1)).as("c1")),
+        "bigram-unigrams", docs)
       val vocab = cUni.agg(count(lit(1)).cast("double").as("vv"))
       big.join(cBig, Seq("w1", "w2"))
         .join(cUni.select($"w".as("w1"), $"c1"), Seq("w1"))

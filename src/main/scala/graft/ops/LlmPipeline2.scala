@@ -1011,7 +1011,7 @@ object LlmPipeline2 {
   /** The (K, nProbe) pair of the shared derived index for a corpus —
     * one distributed count, then pure arithmetic.
     */
-  private[graft] def ivfDerivedParams(s: SparkSession, d: String): (Int, Int) = {
+  private def ivfDerivedParams(s: SparkSession, d: String): (Int, Int) = {
     val k = ivfDerivedK(corpusStats(s, d)._1)
     (k, ivfDerivedProbe(k))
   }
@@ -1545,23 +1545,6 @@ object LlmPipeline2 {
       .filter($"rn" <= k)
       .select("probe", "vec_id", "rn")
   }
-
-  /** Parameter-sweep accessor for the PQ pipeline (quality tooling —
-    * see tools/PqProbe): (probe, vec_id) pairs at explicit (K, R).
-    */
-  private[graft] def pqProbeTool(
-      s: SparkSession, d: String, numCells: Int, probes: Seq[Long],
-      rerank: Int): Seq[(Long, Long)] =
-    pqTopKMulti(s, d, numCells = numCells, probes = probes, rerank = rerank)
-      .select("probe", "vec_id").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSeq
-
-  /** Exact-scan accessor for the same tooling. */
-  private[graft] def exactProbeTool(
-      s: SparkSession, d: String, probes: Seq[Long]): Seq[(Long, Long)] =
-    LlmPipeline.exactTopKMulti(s, d, 10, probes)
-      .select("probe", "vec_id").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSeq
 
   /** DuckDB spelling of [[pqTopK]] (unrolled per-subspace Lloyd CTEs),
     * parameterized identically. DuckDB's generate_subscripts is

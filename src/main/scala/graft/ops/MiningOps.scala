@@ -812,11 +812,12 @@ object MiningOps {
       val e = coEdges(s, d) // canonical a < b, distinct
       val sym = e.select($"a".as("n"), $"b".as("m"))
         .unionByName(e.select($"b".as("n"), $"a".as("m")))
-      // node-bounded degree ledger, checkpointed: three join branches
+      // node-bounded degree ledger, materialized: three join branches
       // (both orientation sides + the coefficient join) each re-ran
-      // the 2×-edge union + count when left lazy (r16, guide §2.4)
-      val deg = sym.groupBy($"n").agg(count(lit(1)).as("dg"))
-        .localCheckpoint(true)
+      // the 2×-edge union + count when left lazy (r16, guide §2.4);
+      // node count grows with the archive, so the cut is size-gated
+      val deg = Mat.gated(s, sym.groupBy($"n").agg(count(lit(1)).as("dg")),
+        "lcc-degree", s"$d/lineitem.parquet")
       val withDeg = e
         .join(deg.select($"n".as("a"), $"dg".as("da")), "a")
         .join(deg.select($"n".as("b"), $"dg".as("db")), "b")

@@ -204,7 +204,7 @@ object SqlSurface {
     * it every iteration re-shuffles the FULL user relation against the
     * per-depth frontier (~log₂(maxId) shuffles of N rows — the
     * dominant term of the measured sf10 9.1×). The residual per-round
-    * floor (~0.5 s/iteration, RcteProbe-measured on an EMPTY corpus)
+    * floor (~0.5 s per iteration, once measured on an EMPTY corpus)
     * is UnionLoop's own materialize-per-iteration machinery and is not
     * reachable from the query text.
     */

@@ -163,10 +163,12 @@ object Replay {
     * `props` payload kept as a string — before the same shard/sink core
     * (A3 → A6/A7). One task per .gz file, the reference's per-file
     * reader parallelism. The report's `deadLettered` counts the lines
-    * the parse rejected.
+    * the parse rejected. `resumeDirs` resumes a previous run as in
+    * [[runReplay]].
     */
   def replayNdjsonGz(
-      s: SparkSession, archiveDir: String, nShards: Int = 4): ReplayReport = {
+      s: SparkSession, archiveDir: String, nShards: Int = 4,
+      resumeDirs: Option[(String, String)] = None): ReplayReport = {
     import org.apache.spark.sql.types._
     val parsed = s.readStream
       .schema(StructType(Seq(StructField("value", StringType))))
@@ -181,7 +183,7 @@ object Replay {
         sum(when(col(s"e.${Ndjson.corruptColumn}").isNotNull, 1L).otherwise(0L)).as("failed"))
       .filter(col(s"e.${Ndjson.corruptColumn}").isNull)
       .select(Ndjson.fields.map(f => col(s"e.${f.name}")): _*)
-    val r = runReplay(s, parsed, nShards, deadLetters = Some("parse_errors"))
+    val r = runReplay(s, parsed, nShards, resumeDirs, deadLetters = Some("parse_errors"))
     System.err.println(s"[replay] failed_records=${r.deadLettered.getOrElse(0L)}")
     r
   }

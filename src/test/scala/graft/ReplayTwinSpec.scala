@@ -578,6 +578,36 @@ class ReplayTwinSpec extends SparkSpec {
     assert(gz.get("dead_lettered").asLong() === 2L)
   }
 
+  test("ReplayCli --format ndjson-gz honours --sink and resumes it with only the new file's rows") {
+    import org.apache.spark.sql.functions._
+    val staged = new java.io.File(graft.core.Ndjson.stageGz(spark, sf, "cli-gz-archive"))
+    val gz = staged.listFiles().filter(_.getName.endsWith(".gz")).sortBy(_.getName)
+    assert(gz.length >= 2)
+    // a mutable copy of the archive holding all but its last file
+    val arch = new java.io.File(graft.core.TmpDirs.dir("cli-gz-resume"))
+    gz.init.foreach(f => java.nio.file.Files.copy(f.toPath, arch.toPath.resolve(f.getName)))
+    val sink = graft.core.TmpDirs.dir("cli-gz-sink")
+    def replay() = ReplayCli.run(spark, ReplayCli.parseArgs(Seq(
+      "--source", arch.getPath, "--format", "ndjson-gz", "--sink", sink)))
+    val first = replay()
+    assert(first.sink === sink, "the ndjson-gz CLI must honour --sink")
+    val lastRows = spark.read.text(gz.last.getPath).count()
+    val all = spark.read.parquet(s"$sf/events.parquet").count()
+    assert(lastRows > 0L && first.rows === all - lastRows)
+    java.nio.file.Files.copy(gz.last.toPath, arch.toPath.resolve(gz.last.getName))
+    val second = replay()
+    assert(second.sink === sink)
+    assert(second.rows === lastRows, "a resumed run lands only the added file's rows")
+    val sunk = spark.read.parquet(sink)
+    assert(sunk.count() === all)
+    assert(sunk.groupBy("event_id").count().filter(col("count") > 1).isEmpty)
+    // flags the NDJSON door does not wire refuse loudly
+    intercept[IllegalArgumentException] {
+      ReplayCli.run(spark, ReplayCli.parseArgs(Seq(
+        "--source", arch.getPath, "--format", "ndjson-gz", "--records-per-sec", "100")))
+    }
+  }
+
   test("CLI --transform-regex rewrites in-stream exactly like the batch transform (A5)") {
     import org.apache.spark.sql.functions._
     // the same regexp_replace machinery the declared transform_rewrite

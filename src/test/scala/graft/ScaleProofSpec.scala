@@ -338,8 +338,8 @@ class ScaleProofSpec extends SparkSpec {
 
   test("streaming family: the committed sf0.1 record carries the lifecycle/operator split, operator share bounded") {
     // VERDICT r14 ask #4, completing the round-13/14 re-baseline: the
-    // family budget is lifecycle floor (Spark-fixed, ~0.5 s × measured
-    // lifecycles — StreamCostProbe arithmetic) + operator share, and
+    // family budget is lifecycle floor (Spark-fixed, an assumed 0.5 s ×
+    // counted lifecycles) + operator share, and
     // the OPERATOR share is the number a round may not silently grow.
     // Bench emits the split per streaming key into bench_full.json;
     // this law bounds it on the committed driver-protocol record.
