@@ -6,7 +6,8 @@ import org.apache.spark.sql.SparkSession
   *   runMain graft.Explain <queryKey> [sfDir] [profile]
   * With `profile` it runs the key cold, then warm (the warm run is what
   * Bench, which warms the session first, sees), and prints each run's
-  * layer profile ([[graft.core.KeyProfile]]) as one JSON line.
+  * layer profile ([[graft.core.KeyProfile]], generated-code
+  * `compile_ms` included) as one JSON line.
   */
 object Explain {
   def main(args: Array[String]): Unit = {

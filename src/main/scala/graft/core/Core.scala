@@ -208,10 +208,11 @@ object Tables {
 
 /** THE gzip-NDJSON archive record (the reference's native wire format):
   * one definition shared by the batch scan (`scan_text_gz`), the
-  * streaming replay front door (`Replay.replayTextGz`) and the archive
-  * staging writers — so the schema the archive is WRITTEN with and the
-  * schema it is PARSED with can never drift apart (a drifted field would
-  * silently null out under PERMISSIVE from_json).
+  * streaming replay front door (`Replay.replayNdjsonGz`), both read
+  * through the JSON file source, and the archive staging writers — so
+  * the schema the archive is WRITTEN with and the schema it is PARSED
+  * with can never drift apart (a drifted field would silently null out
+  * under a PERMISSIVE parse).
   */
 object Ndjson {
   import org.apache.spark.sql.types._
@@ -227,8 +228,8 @@ object Ndjson {
   /** Parse schema for clean lines. */
   val recordSchema: StructType = StructType(fields)
 
-  /** Parse schema with the declared corrupt-record column (PERMISSIVE
-    * from_json never yields a null struct — malformed lines surface ONLY
+  /** Parse schema with the declared corrupt-record column (a PERMISSIVE
+    * parse never drops a non-blank line — malformed lines surface ONLY
     * through this column).
     */
   val corruptColumn = "_corrupt"
@@ -641,6 +642,14 @@ object Sessions {
       // ≤500-record put-batch files.
       .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
       .config("spark.ui.enabled", "false")
+      // CodeGenerator's cache is keyed by (context class loader, source
+      // text), and every session — each streaming query runs in a clone —
+      // gets its own artifact class loader by default. A replay drain then
+      // recompiled the same ~19 generated classes with Janino (0.16–0.34 s
+      // per drain on a 4-core host, plus tasks queued on the codegen
+      // lock). The engine adds no artifacts, so all sessions share one
+      // loader and one codegen cache.
+      .config("spark.sql.artifact.isolation.enabled", "false")
   }
 }
 

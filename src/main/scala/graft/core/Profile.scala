@@ -3,6 +3,7 @@ package graft.core
 import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.streaming.StreamingQueryListener
 import org.apache.spark.sql.streaming.StreamingQueryListener._
@@ -31,6 +32,7 @@ final class Profile private (s: SparkSession) extends SparkListener
   private val acc = new ConcurrentHashMap[String, Acc]()
   private val stageTag = new ConcurrentHashMap[Int, String]()
   private val runTag = new ConcurrentHashMap[java.util.UUID, String]()
+  private val compileNs = new ConcurrentHashMap[String, Long]()
   /** (epoch ms, tag) in the order the caller set them. */
   @volatile private var windows = Vector.empty[(Long, String)]
   @volatile private var marker = (-1, new CountDownLatch(1))
@@ -103,9 +105,13 @@ final class Profile private (s: SparkSession) extends SparkListener
   }
 
   /** Build a DataFrame under `<name>:build`, then count it under
-    * `<name>:exec`. Returns the build and action wall ms.
+    * `<name>:exec`. Returns the build and action wall ms. The Janino
+    * compile time spent meanwhile is recorded for [[of]]; it is a
+    * JVM-wide counter, so it charges any compile of a concurrent caller
+    * here too.
     */
-  def run(name: String)(build: => DataFrame): (Double, Double) =
+  def run(name: String)(build: => DataFrame): (Double, Double) = {
+    val c0 = CodeGenerator.compileTime
     try {
       phase(s"$name:build")
       val t0 = System.nanoTime()
@@ -114,7 +120,11 @@ final class Profile private (s: SparkSession) extends SparkListener
       phase(s"$name:exec")
       df.count()
       ((t1 - t0) / 1e6, (System.nanoTime() - t1) / 1e6)
-    } finally phase(null)
+    } finally {
+      phase(null)
+      compileNs.put(name, CodeGenerator.compileTime - c0)
+    }
+  }
 
   /** Wait until every event posted so far has been delivered: one
     * marker job drains the shared listener queue, and each started
@@ -135,7 +145,8 @@ final class Profile private (s: SparkSession) extends SparkListener
     val b = bucket(s"$name:build")
     val e = bucket(s"$name:exec")
     def both(f: Acc => Long) = f(b) + f(e)
-    KeyProfile(buildMs, b.jobs, e.planMs, actionMs - e.planMs, both(_.jobs),
+    KeyProfile(buildMs, b.jobs, e.planMs, actionMs - e.planMs,
+      compileNs.getOrDefault(name, 0L) / 1e6, both(_.jobs),
       both(_.stages), both(_.tasks), both(_.runMs), both(_.shuffleRead),
       both(_.shuffleWrite), both(_.spill), both(_.lifecycles),
       (b.triggerMs.toSeq ++ e.triggerMs.toSeq).groupMapReduce(_._1)(_._2)(_ + _))
@@ -152,16 +163,19 @@ final class Profile private (s: SparkSession) extends SparkListener
 /** One key's layer profile. `jobs` … `spill_bytes` cover build and
   * action together; `build_jobs` is the build's share. `plan_ms` is the
   * action's analysis, optimization and planning; `exec_ms` is the rest
-  * of the action's wall time.
+  * of the action's wall time. `compile_ms` is the generated-code compile
+  * time across build and action, wherever it ran (driver or task
+  * threads); it overlaps the other layers rather than adding to them.
   */
 final case class KeyProfile(buildMs: Double, buildJobs: Long, planMs: Long,
-    execMs: Double, jobs: Long, stages: Long, tasks: Long, executorRunMs: Long,
-    shuffleReadBytes: Long, shuffleWriteBytes: Long, spillBytes: Long,
-    lifecycles: Long, triggerMs: Map[String, Long]) {
+    execMs: Double, compileMs: Double, jobs: Long, stages: Long, tasks: Long,
+    executorRunMs: Long, shuffleReadBytes: Long, shuffleWriteBytes: Long,
+    spillBytes: Long, lifecycles: Long, triggerMs: Map[String, Long]) {
   private def r(v: Double) = String.format(java.util.Locale.ROOT, "%.1f", Double.box(v))
   def json: String =
     s"""{"build_ms":${r(buildMs)},"build_jobs":$buildJobs,"plan_ms":$planMs,""" +
-      s""""exec_ms":${r(execMs)},"jobs":$jobs,"stages":$stages,"tasks":$tasks,""" +
+      s""""exec_ms":${r(execMs)},"compile_ms":${r(compileMs)},""" +
+      s""""jobs":$jobs,"stages":$stages,"tasks":$tasks,""" +
       s""""executor_run_ms":$executorRunMs,"shuffle_read_bytes":$shuffleReadBytes,""" +
       s""""shuffle_write_bytes":$shuffleWriteBytes,"spill_bytes":$spillBytes""" +
       (if (lifecycles == 0) "}"

@@ -70,12 +70,14 @@ object Relational {
   /** A1–A3 format fidelity: the reference's native archive format is
     * gzip NDJSON text, not parquet. Stage the events table as gzip
     * NDJSON (content deterministically derived from the archive), then
-    * read the text back through gzip decompress → `from_json` (A2
-    * decompress + A3 parse) — including the nested `props` payload,
-    * parsed as JSON-in-JSON — and aggregate. The oracle restates the
-    * aggregation over the same source rows; equality proves the text
-    * round trip is lossless (to_json/from_json of DOUBLE uses
-    * shortest-round-trip rendering, and the sum accumulates in DECIMAL).
+    * read it back through the JSON file source, which decompresses by
+    * extension and parses each line from its bytes (A2 decompress + A3
+    * parse) — the same reader the streaming door `replayNdjsonGz` uses.
+    * The nested `props` payload is parsed as JSON-in-JSON, then the rows
+    * are aggregated. The oracle restates the aggregation over the same
+    * source rows; equality proves the text round trip is lossless (JSON
+    * rendering of DOUBLE is shortest-round-trip, and the sum accumulates
+    * in DECIMAL).
     *
     * Scale stance: .gz is not splittable — parallelism is one task per
     * archive file, exactly the reference's per-file reader model — so
@@ -91,10 +93,9 @@ object Relational {
       // Shared record definition (graft.core.Ndjson): the schema the
       // archive is written with IS the schema it is parsed with.
       val dir = Ndjson.stageGz(s, d, "events-ndjson-gz")
-      s.read.text(dir)
-        .select(from_json($"value", Ndjson.recordSchema).as("e"))
-        .select($"e.event_type".as("event_type"), $"e.value".as("value"),
-          from_json($"e.props", StructType(Seq(StructField("k", IntegerType))))
+      s.read.schema(Ndjson.recordSchema).json(dir)
+        .select($"event_type", $"value",
+          from_json($"props", StructType(Seq(StructField("k", IntegerType))))
             .getField("k").cast("long").as("k"))
         .groupBy("event_type")
         .agg(count(lit(1)).as("cnt"), sum($"k").as("sum_k"),

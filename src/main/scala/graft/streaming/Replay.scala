@@ -158,31 +158,30 @@ object Replay {
   }
 
   /** The reference's NATIVE-format front door: the archive is gzip
-    * NDJSON text. The streaming text source decompresses by extension
-    * (A2) and `from_json` parses each line — including the nested
-    * `props` payload kept as a string — before the same shard/sink core
-    * (A3 → A6/A7). One task per .gz file, the reference's per-file
-    * reader parallelism. The report's `deadLettered` counts the lines
-    * the parse rejected. `resumeDirs` resumes a previous run as in
-    * [[runReplay]].
+    * NDJSON text. The streaming JSON file source decompresses by
+    * extension (A2) and parses each line straight from its bytes —
+    * the nested `props` payload stays a string — before the same
+    * shard/sink core (A3 → A6/A7). One task per .gz file, the
+    * reference's per-file reader parallelism. Blank and whitespace-only
+    * lines are skipped, not records; the report's `deadLettered` counts
+    * the lines the PERMISSIVE parse rejected. `resumeDirs` resumes a
+    * previous run as in [[runReplay]].
     */
   def replayNdjsonGz(
       s: SparkSession, archiveDir: String, nShards: Int = 4,
       resumeDirs: Option[(String, String)] = None): ReplayReport = {
-    import org.apache.spark.sql.types._
+    val corrupt = col(Ndjson.corruptColumn)
     val parsed = s.readStream
-      .schema(StructType(Seq(StructField("value", StringType))))
-      .text(archiveDir)
-      .select(from_json(col("value"), Ndjson.corruptSchema,
-        Map("columnNameOfCorruptRecord" -> Ndjson.corruptColumn)).as("e"))
+      .schema(Ndjson.corruptSchema)
+      .option("columnNameOfCorruptRecord", Ndjson.corruptColumn)
+      .json(archiveDir)
       // A9 failed records: count lines the parse rejected, then DROP
       // them (dead-letter semantics). Without the filter a corrupt line
       // becomes an all-null row whose null partition key would land in a
       // default shard partition — silent corruption, not replay.
-      .observe("parse_errors",
-        sum(when(col(s"e.${Ndjson.corruptColumn}").isNotNull, 1L).otherwise(0L)).as("failed"))
-      .filter(col(s"e.${Ndjson.corruptColumn}").isNull)
-      .select(Ndjson.fields.map(f => col(s"e.${f.name}")): _*)
+      .observe("parse_errors", sum(when(corrupt.isNotNull, 1L).otherwise(0L)).as("failed"))
+      .filter(corrupt.isNull)
+      .select(Ndjson.fields.map(f => col(f.name)): _*)
     val r = runReplay(s, parsed, nShards, resumeDirs, deadLetters = Some("parse_errors"))
     System.err.println(s"[replay] failed_records=${r.deadLettered.getOrElse(0L)}")
     r
@@ -302,9 +301,21 @@ object Replay {
         .groupMapReduce(_._1)(_._2.longValue)(_ + _))
   }
 
-  /** The A7 put-batch sink, shared by every replay trigger mode. One
-    * writer task per shard (the per-shard ordered producer model). The
-    * ≤500-record PutRecords batches are modeled as a put_seq column —
+  /** The A7 put-batch sink, shared by every replay trigger mode.
+    * `repartition(nShards, shard)` puts each shard whole in ONE writer
+    * task (the per-shard ordered producer model), but a task may hold
+    * several shards: the exchange hashes the shard value again, so on
+    * Spark 4.1.2 shards 0 and 1 share a task at nShards = 4 (partition
+    * 2 stays empty) and both shards share one task at nShards = 2. The
+    * sink's write parallelism is therefore at most nShards tasks and
+    * often fewer, whatever the core count. `repartitionById(nShards,
+    * shard)` would map shard i to task i, but only on an int attribute:
+    * casting the long `shard` inside the call adds a second
+    * hashpartitioning exchange, and with 4 busy tasks on a 4-core box
+    * it measured no faster, so the hash partitioning stays. The
+    * executed write plan sorts once: `WriteFiles` sits directly on the
+    * per-shard `Window`, with no second sort for the partitioned write.
+    * The ≤500-record PutRecords batches are modeled as a put_seq column —
     * the real sink is an API call, not a file, so grouping puts inside
     * one file per shard keeps the batch contract verifiable in-data
     * without exploding the sink into hundreds of tiny files. Rows are
@@ -717,8 +728,8 @@ object Replay {
     * (A6/A7), then the watermarked windowed aggregation over the
     * replayed stream (A8). Same oracle as replay_stream/stream_tumbling
     * — the hash match proves the text-format path is loss-free,
-    * dup-free, and value-exact (to_json/from_json round-trips doubles;
-    * sums accumulate in DECIMAL).
+    * dup-free, and value-exact (the JSON writer and reader round-trip
+    * doubles; sums accumulate in DECIMAL).
     */
   private val replayTextArchive = Q(
     "replay_text_gz",

@@ -44,4 +44,12 @@ class ProfileSpec extends SparkSpec {
     // lifecycle_ms = wall − Σ triggerExecution is never negative
     assert(trigger <= wallMs, s"Σ triggerExecution $trigger ms exceeds the key's wall $wallMs ms")
   }
+
+  test("each key's profile carries its compile time, within the key's wall time") {
+    profiles.foreach { case (k, (p, wallMs)) =>
+      assert(p.json.contains("\"compile_ms\":"), k)
+      assert(p.compileMs >= 0.0 && p.compileMs <= wallMs,
+        s"$k: compile ${p.compileMs} ms exceeds the key's wall $wallMs ms")
+    }
+  }
 }

@@ -37,6 +37,33 @@ class ReplayTwinSpec extends SparkSpec {
     assert(sunk.filter(col("user_id").isNull).isEmpty)
   }
 
+  test("blank and whitespace-only NDJSON lines are skipped, never null-keyed sink rows") {
+    import org.apache.spark.sql.functions._
+    // own label: this test MUTATES its staged copy
+    val arch = graft.core.Ndjson.stageGz(spark, sf, "blank-line-archive")
+    java.nio.file.Files.write(
+      java.nio.file.Paths.get(arch, "garbage.txt"),
+      "not json at all\n\n{\n   \t \n{\"event_id\": oops}\n".getBytes("UTF-8"))
+    val r = Replay.replayNdjsonGz(spark, arch)
+    val good = spark.read.parquet(s"$sf/events.parquet").count()
+    assert(r.deadLettered === Some(3L), "only the malformed lines are dead-lettered")
+    val sunk = spark.read.parquet(r.sink)
+    assert(sunk.count() === good)
+    assert(r.rows === good)
+    assert(sunk.filter(col("user_id").isNull).isEmpty)
+  }
+
+  test("a second NDJSON drain in one session compiles no generated class") {
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    val arch = graft.core.Ndjson.stageGz(spark, sf, "events-ndjson-gz")
+    val first = Replay.replayNdjsonGz(spark, arch)
+    val before = CodeGenerator.compileTime
+    val second = Replay.replayNdjsonGz(spark, arch)
+    assert(CodeGenerator.compileTime === before,
+      "each streaming query's session must share the codegen cache")
+    assert(second.rows === first.rows && first.rows > 0L)
+  }
+
   test("DLQ redrive recovers exactly the first frame's messages, twice") {
     import spark.implicits._
     // ids 0..9: frame g=0 holds ids 0..7 (Σid 28), g=1 holds 8,9. Both
