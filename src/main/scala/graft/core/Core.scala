@@ -650,6 +650,12 @@ object Sessions {
       // lock). The engine adds no artifacts, so all sessions share one
       // loader and one codegen cache.
       .config("spark.sql.artifact.isolation.enabled", "false")
+      // Both of Hadoop's `file:` APIs without process forks (see
+      // ForkFreeRawLocalFileSystem). The FileSystem cache is keyed by
+      // scheme, authority and user, not by conf: the first `file:`
+      // filesystem a JVM creates decides for every session in it.
+      .config("spark.hadoop.fs.file.impl", classOf[ForkFreeLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[ForkFreeLocalFs].getName)
   }
 }
 

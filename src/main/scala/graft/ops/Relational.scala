@@ -79,10 +79,11 @@ object Relational {
     * rendering of DOUBLE is shortest-round-trip, and the sum accumulates
     * in DECIMAL).
     *
-    * Scale stance: .gz is not splittable — parallelism is one task per
-    * archive file, exactly the reference's per-file reader model — so
-    * the staged write keeps Spark's default output partitioning: N part
-    * files ⇒ N parallel decompress tasks. A 100 TB archive arrives as
+    * Scale stance: .gz is not splittable — a file is never split across
+    * tasks, and Spark packs whole files into about one scan task per
+    * core (`FilePartition`, 4 MB `openCostInBytes`), so the staged write
+    * keeps Spark's default output partitioning: more part files than
+    * cores keep every core decompressing. A 100 TB archive arrives as
     * many files, never one.
     */
   private val scanTextGz = Q(

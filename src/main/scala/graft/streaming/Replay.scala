@@ -161,8 +161,10 @@ object Replay {
     * NDJSON text. The streaming JSON file source decompresses by
     * extension (A2) and parses each line straight from its bytes —
     * the nested `props` payload stays a string — before the same
-    * shard/sink core (A3 → A6/A7). One task per .gz file, the
-    * reference's per-file reader parallelism. Blank and whitespace-only
+    * shard/sink core (A3 → A6/A7). A .gz file is never split, but Spark
+    * packs whole files into about one scan task per core
+    * (`FilePartition`, 4 MB `openCostInBytes`): 16 small files on 4
+    * cores scan as 4 tasks of 4 files each. Blank and whitespace-only
     * lines are skipped, not records; the report's `deadLettered` counts
     * the lines the PERMISSIVE parse rejected. `resumeDirs` resumes a
     * previous run as in [[runReplay]].
@@ -215,7 +217,7 @@ object Replay {
     val (out, ckpt) = resumeDirs.getOrElse(
       (TmpDirs.dir("replay-out"), TmpDirs.dir("replay-ckpt")))
     val stream = source
-      .withColumn("shard", pmod(xxhash64(col("user_id")), lit(nShards)))
+      .withColumn("shard", shardOf(col("user_id"), nShards))
       // A9: per-batch progress metric, surfaced through the streaming
       // progress events (observedMetrics) and summed below.
       .observe("replay_progress", count(lit(1)).as("rows"))
@@ -301,20 +303,21 @@ object Replay {
         .groupMapReduce(_._1)(_._2.longValue)(_ + _))
   }
 
+  /** Partition-key routing (A6): the shard of a record, as an INT so
+    * that `repartitionById` in [[writePutBatches]] takes it as the
+    * partition id directly (a long would need a cast there, which plans
+    * a second Exchange).
+    */
+  private def shardOf(key: Column, nShards: Int): Column =
+    pmod(xxhash64(key), lit(nShards)).cast("int")
+
   /** The A7 put-batch sink, shared by every replay trigger mode.
-    * `repartition(nShards, shard)` puts each shard whole in ONE writer
-    * task (the per-shard ordered producer model), but a task may hold
-    * several shards: the exchange hashes the shard value again, so on
-    * Spark 4.1.2 shards 0 and 1 share a task at nShards = 4 (partition
-    * 2 stays empty) and both shards share one task at nShards = 2. The
-    * sink's write parallelism is therefore at most nShards tasks and
-    * often fewer, whatever the core count. `repartitionById(nShards,
-    * shard)` would map shard i to task i, but only on an int attribute:
-    * casting the long `shard` inside the call adds a second
-    * hashpartitioning exchange, and with 4 busy tasks on a 4-core box
-    * it measured no faster, so the hash partitioning stays. The
-    * executed write plan sorts once: `WriteFiles` sits directly on the
-    * per-shard `Window`, with no second sort for the partitioned write.
+    * `repartitionById(nShards, shard)` sends shard i to writer task i:
+    * one task per shard, each shard whole in one task (the per-shard
+    * ordered producer model), so the write runs `nShards` tasks. The
+    * executed write plan has one Exchange and sorts once: `WriteFiles`
+    * sits directly on the per-shard `Window`, with no second sort for
+    * the partitioned write.
     * The ≤500-record PutRecords batches are modeled as a put_seq column —
     * the real sink is an API call, not a file, so grouping puts inside
     * one file per shard keeps the batch contract verifiable in-data
@@ -343,12 +346,12 @@ object Replay {
     // so a record's batch number is identical whether or not its first
     // put attempt failed — the retry re-sends the same put, it does
     // not renumber the stream
-    val seq = batch.repartition(nShards, col("shard"))
+    val seq = batch.repartitionById(nShards, col("shard"))
       .withColumn("put_seq",
         (lit(epochId * 1000000000000L) + (row_number().over(byShard) - 1) / 500).cast("long"))
       .withColumn("epoch", lit(epochId))
     // The retry split and the pacing read both re-consume `seq` — a
-    // repartition + per-shard window over the whole epoch — so pin it
+    // shuffle + per-shard window over the whole epoch — so pin it
     // for the duration of the sink call instead of recomputing it per
     // wave (2 writes + a count re-derived the epoch 3×; persist is
     // epoch-scoped and released before the next batch, so executor
@@ -427,7 +430,7 @@ object Replay {
     val schema = s.read.parquet(archiveDir).schema
     val stream = s.readStream.schema(schema).parquet(archiveDir)
       .withColumn("ms", Tables.msExpr(schema))
-      .withColumn("shard", pmod(xxhash64(col("user_id")), lit(nShards)))
+      .withColumn("shard", shardOf(col("user_id"), nShards))
     val q = stream.writeStream
       .option("checkpointLocation", ckpt)
       .trigger(Trigger.ProcessingTime(tick))

@@ -235,6 +235,67 @@ class ReplayTwinSpec extends SparkSpec {
     assert(byKey.isEmpty)
   }
 
+  test("the sink writes shard i from writer task i, through one shuffle Exchange") {
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    import scala.jdk.CollectionConverters._
+    val aqe = new AdaptiveSparkPlanHelper {}
+    val writes = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (aqe.find(qe.executedPlan)(_.isInstanceOf[DataWritingCommandExec]).isDefined)
+          writes.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val partNo = raw"part-(\d+)-".r
+    spark.listenerManager.register(listener)
+    try Seq(2, 4, 8).foreach { n =>
+      val out = new java.io.File(
+        Replay.replayArchive(spark, s"$sf/events.parquet", nShards = n).sink)
+      // parquet names each file after the task that wrote it: part-<task>-…
+      val tasks = out.listFiles().filter(_.getName.startsWith("shard=")).toSeq.map { d =>
+        val files = org.apache.commons.io.FileUtils
+          .listFiles(d, Array("parquet"), true).asScala.toSeq
+        d.getName.stripPrefix("shard=").toInt ->
+          files.map(f => partNo.findFirstMatchIn(f.getName).get.group(1).toInt).toSet
+      }.toMap
+      assert(tasks.keySet === (0 until n).toSet, s"nShards=$n")
+      tasks.foreach { case (shard, ts) =>
+        assert(ts === Set(shard), s"nShards=$n: shard=$shard written by tasks $ts")
+      }
+    } finally spark.listenerManager.unregister(listener)
+    eventually(timeout(10.seconds)) { assert(writes.size === 3) }
+    writes.asScala.foreach { p =>
+      assert(aqe.collect(p) { case e: ShuffleExchangeLike => e }.size === 1, p.treeString)
+    }
+  }
+
+  test("an NDJSON drain forks no process for its sink or checkpoint") {
+    import scala.jdk.CollectionConverters._
+    val arch = graft.core.Ndjson.stageGz(spark, sf, "events-ndjson-gz")
+    val (sink, ckpt) = (graft.core.TmpDirs.dir("fork-sink"), graft.core.TmpDirs.dir("fork-ckpt"))
+    val dirs = Seq(sink, ckpt).flatMap(d => Seq(d, new java.io.File(d).getCanonicalPath))
+    val rec = new jdk.jfr.Recording()
+    rec.enable("jdk.ProcessStart")
+    rec.start()
+    val r = try Replay.replayNdjsonGz(spark, arch, resumeDirs = Some((sink, ckpt)))
+      finally rec.stop()
+    val jfr = java.nio.file.Files.createTempFile("drain-forks", ".jfr")
+    try {
+      rec.dump(jfr)
+      val forks = jdk.jfr.consumer.RecordingFile.readAllEvents(jfr).asScala
+        .filter(_.getEventType.getName == "jdk.ProcessStart")
+        .map(_.getString("command"))
+        .filter(c => dirs.exists(c.contains))
+      assert(r.rows > 0L)
+      assert(forks.size === 0, s"e.g. ${forks.take(3).mkString("; ")}")
+    } finally { rec.close(); java.nio.file.Files.deleteIfExists(jfr) }
+  }
+
   test("two concurrent replays in one session each report their own run") {
     import org.apache.spark.sql.functions._
     import scala.jdk.CollectionConverters._
