@@ -118,12 +118,6 @@ object Bench {
         catch { case t: Throwable =>
           System.err.println(s"[bench] streaming warmup failed ($name): $t") }
       }
-    // Pre-stage FIXTURE inputs that are not the operator under test: the
-    // doubled at-least-once archive (cached per-JVM) so the
-    // stream_dedup_watermark timing measures the dedup, not two writes.
-    try graft.streaming.Replay.stageDupArchive(spark, sfDir)
-    catch { case t: Throwable =>
-      System.err.println(s"[bench] dup-archive staging failed: $t") }
     // Sorted key order: HashMap iteration order reshuffles whenever keys
     // are added, which made round-over-round per-query numbers
     // incomparable (a query scheduled right after a heavyweight

@@ -976,19 +976,18 @@ object ScaleOps {
     * ScaleProofSpec via [[compactRun]].
     */
   /** The 64-fragment "small-file problem" tree is FIXTURE — a pure
-    * function of the archive — so like the gz archive it stages once
-    * per (corpus, JVM) and the timed path measures the compaction job
-    * itself: metadata listing + coalesce rewrite + integrity summary.
+    * function of the archive — so like the gz archive it is an
+    * [[graft.core.IndexCache]] artifact and the timed path measures the
+    * compaction job itself: metadata listing + coalesce rewrite +
+    * integrity summary.
     */
-  private val fragStaged = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private[graft] def compactRun(s: SparkSession, d: String): (DataFrame, Int, Int) = {
     import s.implicits._
-    val frag = fragStaged.computeIfAbsent(d, _ => {
+    val frag = graft.core.IndexCache.dir(s"compact-frag|$d") {
       val p = TmpDirs.dir("compact-frag")
       Tables.events(s, d).repartition(64).write.mode("overwrite").parquet(p)
       p
-    })
+    }
     val out = TmpDirs.dir("compact-out")
     val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
     def dataFiles(p: String) = fs.listStatus(new org.apache.hadoop.fs.Path(p))

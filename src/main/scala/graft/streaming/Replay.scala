@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Observation, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -22,7 +22,8 @@ import graft.core.{Det, Ndjson, OSql, Q, Tables, TmpDirs}
   *   fast machine pays the difference as sleep, a loaded one in the
   *   write itself, so this — not `pacingMs` — is what the contract bounds
   * @param retried records that failed their first simulated PutRecords
-  *   attempt and landed via the retry wave; None when injection is off
+  *   attempt and landed in the sink's `attempt=2` partition, as the
+  *   sink write itself observed them; None when injection is off
   * @param deadLettered lines the NDJSON parse rejected and the sink
   *   dropped (a corrupt record must never become a null-keyed row in a
   *   shard); None for a parquet archive
@@ -311,27 +312,39 @@ object Replay {
   private def shardOf(key: Column, nShards: Int): Column =
     pmod(xxhash64(key), lit(nShards)).cast("int")
 
-  /** The A7 put-batch sink, shared by every replay trigger mode.
-    * `repartitionById(nShards, shard)` sends shard i to writer task i:
-    * one task per shard, each shard whole in one task (the per-shard
-    * ordered producer model), so the write runs `nShards` tasks. The
-    * executed write plan has one Exchange and sorts once: `WriteFiles`
-    * sits directly on the per-shard `Window`, with no second sort for
-    * the partitioned write.
+  /** The A7 put-batch sink, shared by every replay trigger mode: each
+    * epoch lands in ONE write job. `repartitionById(nShards, shard)`
+    * sends shard i to writer task i: one task per shard, each shard
+    * whole in one task (the per-shard ordered producer model), so the
+    * write runs `nShards` tasks.
     * The ≤500-record PutRecords batches are modeled as a put_seq column —
     * the real sink is an API call, not a file, so grouping puts inside
     * one file per shard keeps the batch contract verifiable in-data
     * without exploding the sink into hundreds of tiny files. Rows are
-    * numbered in event-time order within their shard AND epoch (see
-    * ordering contract above); put_seq is prefixed by the micro-batch
-    * epoch so batches appended by successive triggers can never merge
-    * into one oversized "put". The write OVERWRITES only this epoch's
-    * partitions (dynamic mode) — a sink-retry of the same epochId is
-    * therefore idempotent, never duplicating puts. The epoch prefix
-    * reserves 1e12 put batches (5e14 rows) per epoch — no realistic
-    * single micro-batch can overflow into the next epoch's put_seq
-    * namespace, and ~9.2e6 epochs fit in a Long, far beyond any replay
-    * run's batch count.
+    * numbered (`rn`) in event-time order within their shard AND epoch
+    * (see ordering contract above); put_seq ([[putSeq]]) is prefixed by
+    * the micro-batch epoch so batches appended by successive triggers
+    * can never merge into one oversized "put". The write OVERWRITES only
+    * this epoch's partitions (dynamic mode) — a sink-retry of the same
+    * epochId is therefore idempotent, never duplicating puts.
+    *
+    * Per-record put retry: `failFirstAttempt` rows land under
+    * `attempt=2`, every other row (a NULL predicate included) under
+    * `attempt=1`, in the same write. A deterministic predicate
+    * ([[putFailureSet]] hashes event_id) gives a crash-retried epoch the
+    * same split, so each attempt partition is overwritten with the same
+    * rows; an append would duplicate them. put_seq is numbered before the
+    * attempt is chosen, so a record's put is identical whether or not
+    * its first attempt failed — the retry re-sends the same put.
+    *
+    * The sink accounts for itself inside that write: when the rate cap
+    * or retry injection is on, an `Observation` on the written rows
+    * reads `max(rn)` — `rn` restarts in every shard, so that is the
+    * slowest shard's record count, the pacing floor — and the attempt-2
+    * row count. The unpaced path carries no observation: a metrics node
+    * between the `Window` and the write makes Spark sort the rows again
+    * for the partitioned write, while without it `WriteFiles` sits
+    * directly on the per-shard `Window` (one Exchange, one sort).
     */
   private def writePutBatches(out: String, nShards: Int, tally: SinkTally,
       putRecordsPerShardSec: Int = 0,
@@ -342,60 +355,33 @@ object Replay {
     val t0 = System.nanoTime()
     val byShard = Window.partitionBy(col("shard"))
       .orderBy(col("ms"), col("event_id"))
-    // put_seq is assigned over the WHOLE epoch before any retry split,
-    // so a record's batch number is identical whether or not its first
-    // put attempt failed — the retry re-sends the same put, it does
-    // not renumber the stream
-    val seq = batch.repartitionById(nShards, col("shard"))
-      .withColumn("put_seq",
-        (lit(epochId * 1000000000000L) + (row_number().over(byShard) - 1) / 500).cast("long"))
+    val rows = batch.repartitionById(nShards, col("shard"))
+      .withColumn("rn", row_number().over(byShard))
+      .withColumn("put_seq", putSeq(epochId, col("rn")))
       .withColumn("epoch", lit(epochId))
-    // The retry split and the pacing read both re-consume `seq` — a
-    // shuffle + per-shard window over the whole epoch — so pin it
-    // for the duration of the sink call instead of recomputing it per
-    // wave (2 writes + a count re-derived the epoch 3×; persist is
-    // epoch-scoped and released before the next batch, so executor
-    // memory holds at most one epoch's rows).
-    val multiPass = failFirstAttempt != null || putRecordsPerShardSec > 0
-    if (multiPass) seq.persist()
-    try {
-      def land(df: DataFrame, attempt: Int): Unit =
-        df.withColumn("attempt", lit(attempt))
-          .write
-          .mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("shard", "epoch", "attempt")
-          .parquet(out)
-      if (failFirstAttempt == null) land(seq, 1)
-      else {
-        // Per-record PutRecords partial failure (the reference's retry
-        // unit): the service rejects the failure set on attempt 1, the
-        // producer re-sends ONLY those records on attempt 2 — two sink
-        // waves, not a whole-epoch redo. Both waves are deterministic
-        // dynamic overwrites of their own (shard, epoch, attempt)
-        // partitions: a crash-retry of the epoch recomputes the SAME
-        // split (the failure set is a hash of event_id), so each wave
-        // replaces exactly its own prior files and the epoch stays
-        // exactly-once — append-mode retries would duplicate under
-        // crash-retry, which is why the attempt lands as a partition.
-        land(seq.filter(!failFirstAttempt), 1)
-        val failed = seq.filter(failFirstAttempt)
-        land(failed, 2)
-        tally.retried.addAndGet(failed.count())
-      }
+      .withColumn("attempt",
+        if (failFirstAttempt == null) lit(1) else when(failFirstAttempt, 2).otherwise(1))
+    val observed = Option.when(failFirstAttempt != null || putRecordsPerShardSec > 0)(
+      Observation())
+    observed.fold(rows)(rows.observe(_, max(col("rn")).as("max_shard_rows"),
+        count_if(col("attempt") === 2).as("retried")))
+      .drop("rn")
+      .write
+      .mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("shard", "epoch", "attempt")
+      .parquet(out)
+    observed.map(_.get).foreach { m =>
+      tally.retried.addAndGet(m("retried").asInstanceOf[Long])
       // A7 drain-rate cap: each Kinesis shard absorbs
       // putRecordsPerShardSec records/second — past it the producer sees
       // ProvisionedThroughputExceeded and backs off, so a replayed epoch
       // cannot complete faster than its SLOWEST shard's record count
       // allows. Pace to that floor: epoch duration ≥ max-shard-records /
-      // rate, minus the time the write itself already took. The
-      // per-shard counts come from the pinned epoch rows — the same row
-      // set both sink waves just landed (the attempt split partitions
-      // it), so the count equals what the written output records.
+      // rate, minus the time the write itself already took. An empty
+      // epoch observes a NULL max.
       if (putRecordsPerShardSec > 0) {
-        val maxShardRows = seq
-          .groupBy(col("shard")).count()
-          .agg(org.apache.spark.sql.functions.max("count")).collect()(0).getLong(0)
+        val maxShardRows = Option(m("max_shard_rows")).fold(0L)(_.asInstanceOf[Int].toLong)
         val floorMs = maxShardRows * 1000L / putRecordsPerShardSec
         val elapsedMs = (System.nanoTime() - t0) / 1000000L
         val paceMs = math.max(0L, floorMs - elapsedMs)
@@ -405,8 +391,20 @@ object Replay {
         System.err.println(
           s"[replay] epoch=$epochId max_shard_rows=$maxShardRows pace_ms=$paceMs")
       }
-    } finally if (multiPass) { seq.unpersist(); () }
+    }
   }
+
+  /** The put batch of the `rn`-th row (1-based) of a shard in epoch
+    * `epochId`: ≤500 rows per put. `floor` makes the put index a BIGINT
+    * before the epoch prefix is added, so the sum never passes through a
+    * double, which past epoch ~9,000 could not hold every put_seq and
+    * merged neighbouring puts. The prefix reserves 1e12 put batches
+    * (5e14 rows) per epoch — no realistic single micro-batch can
+    * overflow into the next epoch's put_seq namespace — and ~9.2e6
+    * epochs fit in a Long.
+    */
+  private[graft] def putSeq(epochId: Long, rn: Column): Column =
+    lit(epochId * 1000000000000L) + floor((rn - 1) / 500)
 
   /** The LONG-RUNNING daemon shape: a `Trigger.ProcessingTime` replay
     * that keeps polling the archive for files that arrive AFTER the
@@ -578,7 +576,7 @@ object Replay {
     *
     * This key ALSO runs the sink's per-record retry path live: a
     * deterministic ~1/8 of records (md5 of event_id) fail their first
-    * simulated PutRecords attempt and land via the retry wave
+    * simulated PutRecords attempt and land in the `attempt=2` partition
     * ([[writePutBatches]]) — the reference retries individual failed
     * records within a batch, not the whole batch. The unchanged oracle
     * is the proof: a retry that lost, duplicated, or renumbered a
@@ -586,8 +584,8 @@ object Replay {
     */
   /** The declared deterministic first-attempt failure set: md5 of the
     * (null-safe) event id, ~12.5% of records. coalesce twice — a NULL
-    * event_id must still hash, and the predicate must never be NULL
-    * (a NULL would drop the record from BOTH sink waves).
+    * event_id must still hash, and a NULL predicate would count the
+    * record as a first-attempt success (`attempt=1`).
     */
   private[graft] val putFailureSet: Column = expr(
     "coalesce(conv(substring(md5(cast(coalesce(event_id, -1) as string)), 1, 4), 16, 10) % 8 = 0, false)")
@@ -797,21 +795,15 @@ object Replay {
     * driver hash-compare against the batch oracle (the original event
     * set). Exercised throttled + twin-asserted in ReplayTwinSpec.
     */
-  /** Per-JVM cache of staged at-least-once (doubled) archives, keyed by
-    * sf dir. The doubled archive is FIXTURE, not operator: staging it
-    * inside every `stream_dedup_watermark` invocation charged ~40% of
-    * the key's bench time to two parquet writes instead of the dedup
-    * itself. First caller stages (two sequential writes so the
-    * duplicate copy lands in files the file source orders after the
-    * originals — mod-time order); everyone after reuses the immutable
-    * dir. Bench pre-stages in its warmup so the timed path measures
-    * only the streaming dedup.
+  /** The staged at-least-once (doubled) archive of an sf dir, an
+    * [[graft.core.IndexCache]] artifact: FIXTURE, not operator, so
+    * `stream_dedup_watermark`'s timed path measures the dedup, not two
+    * parquet writes, and the build is ledgered as staging. Two
+    * sequential writes, so the duplicate copy lands in files the file
+    * source orders after the originals (mod-time order).
     */
-  private val dupArchives =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private[graft] def stageDupArchive(s: SparkSession, d: String): String =
-    dupArchives.computeIfAbsent(d, _ => {
+    graft.core.IndexCache.dir(s"dup-archive|$d") {
       import s.implicits._
       val ev = Tables.events(s, d)
         .select($"event_id", $"user_id", $"event_type", $"ms")
@@ -819,7 +811,7 @@ object Replay {
       ev.write.mode("overwrite").parquet(dir)
       ev.write.mode("append").parquet(dir)
       dir
-    })
+    }
 
   private[graft] def dedupWatermarked(
       s: SparkSession, d: String, maxFilesPerTrigger: Int = 0): DataFrame = {

@@ -236,8 +236,9 @@ class ReplayTwinSpec extends SparkSpec {
   }
 
   test("the sink writes shard i from writer task i, through one shuffle Exchange") {
-    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.{QueryExecution, SortExec, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.window.WindowExec
     import org.apache.spark.sql.execution.command.DataWritingCommandExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
     import org.scalatest.concurrent.Eventually._
@@ -271,6 +272,53 @@ class ReplayTwinSpec extends SparkSpec {
     eventually(timeout(10.seconds)) { assert(writes.size === 3) }
     writes.asScala.foreach { p =>
       assert(aqe.collect(p) { case e: ShuffleExchangeLike => e }.size === 1, p.treeString)
+      // the unpaced write sorts once, under its Window: nothing re-sorts
+      // the numbered rows for the partitioned write
+      assert(aqe.find(p)(_.isInstanceOf[WindowExec]).isDefined, p.treeString)
+      assert(aqe.collect(p) {
+        case s: SortExec if aqe.find(s.child)(_.isInstanceOf[WindowExec]).isDefined => s
+      }.isEmpty, p.treeString)
+    }
+  }
+
+  test("a capped, retry-injected sink epoch runs the same jobs as a plain one") {
+    // the same 2-file archive at one file per epoch on both sides, so the
+    // epoch split is the same; the sink's pacing floor and retry count
+    // must come out of its one write, not out of side jobs
+    val archive = graft.core.TmpDirs.dir("jobs-archive")
+    spark.read.parquet(s"$sf/events.parquet").repartition(2)
+      .write.mode("overwrite").parquet(archive)
+    val p = graft.core.Profile(spark)
+    try {
+      def replay(name: String)(run: => graft.streaming.ReplayReport) = {
+        var r: graft.streaming.ReplayReport = null
+        val (b, a) = p.run(name) { r = run; spark.emptyDataFrame }
+        (r, () => p.of(name, b, a).buildJobs)
+      }
+      val (plain, plainJobs) = replay("plain")(
+        Replay.replayArchive(spark, archive, nShards = 4, maxFilesPerTrigger = 1))
+      val (capped, cappedJobs) = replay("capped")(
+        Replay.replayArchive(spark, archive, nShards = 4, maxFilesPerTrigger = 1,
+          putRecordsPerShardSec = 1000000, failFirstAttempt = Replay.putFailureSet))
+      p.drain()
+      assert(capped.batches.map(_._2) === plain.batches.map(_._2))
+      assert(capped.retried.exists(_ > 0))
+      assert(plainJobs() > 0L)
+      assert(cappedJobs() === plainJobs(),
+        s"over ${plain.batches.size} epochs")
+    } finally p.close()
+  }
+
+  test("put_seq holds at most 500 rows per put at any epoch a Long can prefix") {
+    import org.apache.spark.sql.functions._
+    Seq(9008L, 9000000L).foreach { epoch =>
+      val got = spark.range(1, 2001).select(col("id").cast("int").as("rn"))
+        .select(col("rn"), Replay.putSeq(epoch, col("rn")).as("put_seq"))
+        .collect().map(r => r.getInt(0) -> r.getLong(1))
+      got.foreach { case (rn, seq) =>
+        assert(seq === epoch * 1000000000000L + (rn - 1) / 500, s"epoch=$epoch rn=$rn")
+      }
+      assert(got.groupBy(_._2).values.map(_.length).max <= 500, s"epoch=$epoch")
     }
   }
 
@@ -743,6 +791,24 @@ class ReplayTwinSpec extends SparkSpec {
     def canon(df: org.apache.spark.sql.DataFrame) =
       df.select(cols: _*).collect().map(_.toSeq).sortBy(_.mkString("|")).toSeq
     assert(canon(injected) === canon(plain))
+  }
+
+  test("a NULL first-attempt predicate lands its row once, under attempt=1") {
+    import org.apache.spark.sql.functions._
+    // a third of the rows get a NULL predicate, a third fail attempt 1
+    val third = col("event_id") % 3
+    val src = spark.read.parquet(s"$sf/events.parquet")
+    val r = Replay.replayArchive(spark, s"$sf/events.parquet", nShards = 4,
+      failFirstAttempt = when(third =!= 0, third === 1))
+    val sunk = spark.read.parquet(r.sink)
+    // every source row exactly once: same count, same multiset of ids
+    assert(sunk.count() === src.count())
+    assert(sunk.select("event_id").exceptAll(src.select("event_id")).isEmpty)
+    val nullRows = sunk.filter(third === 0)
+    assert(nullRows.count() === src.filter(third === 0).count())
+    assert(nullRows.filter(col("attempt") =!= 1).isEmpty)
+    assert(r.retried === Some(src.filter(third === 1).count()))
+    assert(r.retried === Some(sunk.filter(col("attempt") === 2).count()))
   }
 
   test("throttled packed-archive replay (1 file/epoch) equals the unthrottled run") {
