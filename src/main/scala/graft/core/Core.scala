@@ -405,42 +405,34 @@ object TmpDirs {
   }
 }
 
-/** Eagerly materialize a small derived relation to scratch parquet and
-  * read it back. This is cross-branch reuse WITHOUT `persist()`: Catalyst
-  * has no cross-branch subtree sharing, so a self-join recomputes its
-  * input twice — but caching leaks entries into the caller's session
-  * (the driver contract allows an externally built session that invokes
-  * many queries, where per-query `persist` without a safe unpersist
-  * point accumulates). A scratch-parquet round trip has the same reuse
-  * effect, costs one small write, and cleans itself up via [[TmpDirs]].
-  * At real scale the materialized signature/band table is the artifact
-  * you'd persist to storage once anyway.
+/** The one eager materialisation: a lineage cut that runs a job before
+  * the query is returned. Use it where a lazy [[Share]] cannot stand:
+  *  - an iteration whose plan would otherwise grow without bound (each
+  *    round reads the last round's rows, not its lineage);
+  *  - a relation with sampled or positional values (range bounds,
+  *    `monotonically_increasing_id`), which must be evaluated once;
+  *  - a plan-shape cut, where a later rule needs a bare stage;
+  *  - evaluation that must happen inside a conf or catalog scope;
+  *  - a relation read both by a cut and by the query around it, or one
+  *    whose readers measured slower sharing it than reading a cut.
+  *
+  * On archives up to 2 GiB the cut is an eager `localCheckpoint`:
+  * executor-local and non-replicated, so an executor loss after the cut
+  * has no recompute path. Above the gate the relation spills to scratch
+  * parquet under [[TmpDirs]] and is read back (fault-tolerant, reaped at
+  * JVM exit). The gate reads directory bytes, no extra job.
   */
-object Mat {
-  def apply(s: SparkSession, df: DataFrame, name: String): DataFrame = {
-    val p = TmpDirs.dir(name)
-    df.write.mode("overwrite").parquet(p)
-    s.read.parquet(p)
-  }
-
-  /** Archive-size threshold below which a SUB-CORPUS derived relation
-    * (distinct users, edge lists, vocabulary ledgers) may materialize
-    * as an executor-local eager checkpoint instead of a parquet spill.
-    * localCheckpoint storage is non-replicated — an executor loss after
-    * the cut has no recompute path — so above the gate the
-    * fault-tolerant [[Mat]] spelling is used (r15 VERDICT ask #9).
-    */
+object Cut {
   private val LocalCheckpointMaxArchiveBytes = 2L << 30
 
-  /** Materialize a derived relation that several plan branches consume:
-    * eager localCheckpoint on small archives (no parquet round trip),
-    * scratch-parquet spill above the gate. The gate reads directory
-    * bytes — no extra job — like every other size-derived knob.
-    */
-  def gated(s: SparkSession, df: DataFrame, name: String, archive: String): DataFrame =
+  def apply(df: DataFrame, name: String, archive: String): DataFrame =
     if (Tables.dirBytes(archive) <= LocalCheckpointMaxArchiveBytes)
       df.localCheckpoint(true)
-    else apply(s, df, name)
+    else {
+      val p = TmpDirs.dir(name)
+      df.write.mode("overwrite").parquet(p)
+      df.sparkSession.read.parquet(p)
+    }
 }
 
 /** Per-JVM build-once memo of DERIVED INDEX ARTIFACTS — materialized
@@ -481,14 +473,21 @@ object IndexCache {
   }
 
   /** DataFrame-valued artifacts: the build is written once to scratch
-    * parquet through [[dir]] and every caller reads it back.
+    * parquet through [[dir]] and every caller reads it back. The read
+    * relation is memoized per (session, path) like [[Tables.t]]'s, so a
+    * later caller in the session infers no schema (a footer job).
     */
-  def apply(s: SparkSession, key: String, build: => DataFrame): DataFrame =
-    s.read.parquet(dir(key) {
+  def apply(s: SparkSession, key: String, build: => DataFrame): DataFrame = {
+    val p = dir(key) {
       val p = TmpDirs.dir("idx")
       build.write.mode("overwrite").parquet(p)
       p
-    })
+    }
+    rels.computeIfAbsent((s, p), _ => s.read.parquet(p))
+  }
+
+  private val rels =
+    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
 
   /** PATH-valued artifacts — staged archive LAYOUTS (KPL frame files,
     * gzip NDJSON encodes, date-partitioned trees) — and the store under

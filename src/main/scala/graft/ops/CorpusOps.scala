@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.core.{Det, Mat, OSql, Q, Tables}
+import graft.core.{Det, OSql, Q, Share, Tables}
 
 /** Corpus-preparation operators beyond cleaning/dedup: PII redaction and
   * weighted source mixing — the two passes that sit between a cleaned
@@ -154,13 +154,9 @@ object CorpusOps {
       import s.implicits._
       val g8 = LlmPipeline.gramRows(s, d, 8)
         .select($"doc_id", md5($"x").as("g"))
-      // the benchmark gram set is Mat'd: both join branches read g8,
-      // and left lazy the corpus-sized gram pass (the dominant cost at
-      // scale) would run once per branch — materializing the TINY
-      // distinct side halves the gram passes
-      val benchGrams = graft.core.Mat(s,
-        g8.filter($"doc_id" % 97 === 0).select("g").distinct(),
-        "decon-bench")
+      // the doc_id filters split g8 between the benchmark and probe
+      // branches, so each document's grams are derived once
+      val benchGrams = g8.filter($"doc_id" % 97 === 0).select("g").distinct()
       val contaminated = g8.filter($"doc_id" % 97 =!= 0)
         .join(broadcast(benchGrams), Seq("g"), "left_semi")
         .select("doc_id").distinct()
@@ -457,15 +453,14 @@ object CorpusOps {
       import s.implicits._
       val toks = t(s, d, "documents")
         .select($"lang", explode(split($"text", " ")).as("tok"))
-      val top = graft.core.Mat(s,
+      val top = Share(
         toks.filter(length($"tok") >= 2)
           .select(explode(expr(
             "transform(sequence(1, length(tok) - 1), i -> substring(tok, i, 2))"))
             .as("pair"))
           .groupBy("pair").agg(count(lit(1)).as("cnt"))
           .orderBy($"cnt".desc, $"pair".asc)
-          .limit(8),
-        "bpe-merges")
+          .limit(8))
       val ranked = top.as("a").join(broadcast(top.as("b")),
           $"b.cnt" > $"a.cnt" ||
             ($"b.cnt" === $"a.cnt" && $"b.pair" < $"a.pair"), "left_outer")
@@ -604,20 +599,15 @@ object CorpusOps {
       val tok = t(s, d, "documents")
         .select($"doc_id", posexplode(split($"text", " ")).as(Seq("pos", "w")))
       val wNext = Window.partitionBy($"doc_id").orderBy($"pos".asc)
-      val big = tok
+      // the bigram rows feed the scoring join and their own count
+      // ledger; the unigram ledger feeds the join and the V scalar —
+      // both shared, so no branch re-runs a tokenize pass
+      val big = Share(tok
         .withColumn("w2", lead($"w", 1).over(wNext))
         .filter($"w2".isNotNull)
-        .select($"doc_id", $"w".as("w1"), $"w2")
-      // vocabulary-bounded count ledgers, materialized: cBig also
-      // feeds the scoring join and cUni both the join and the V
-      // scalar — left lazy each consumer re-ran its own tokenize
-      // pass over the corpus (r16, guide §2.4); the vocabulary grows
-      // with the corpus, so the cut is size-gated
-      val docs = s"$d/documents.parquet"
-      val cBig = Mat.gated(s, big.groupBy("w1", "w2").agg(count(lit(1)).as("c12")),
-        "bigram-pairs", docs)
-      val cUni = Mat.gated(s, tok.groupBy("w").agg(count(lit(1)).as("c1")),
-        "bigram-unigrams", docs)
+        .select($"doc_id", $"w".as("w1"), $"w2"))
+      val cBig = big.groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
+      val cUni = Share(tok.groupBy("w").agg(count(lit(1)).as("c1")))
       val vocab = cUni.agg(count(lit(1)).cast("double").as("vv"))
       big.join(cBig, Seq("w1", "w2"))
         .join(cUni.select($"w".as("w1"), $"c1"), Seq("w1"))
@@ -1126,30 +1116,20 @@ object CorpusOps {
   // no float in any ordering key.
   // ------------------------------------------------------------------
 
-  /** The (lang, w1, w2, c12) bigram count ledger of `text_bigram_kneser_ney`
-    * over a documents table — the fragment whose lead window PlanSpec
-    * pins to doc_id partitions.
-    */
-  private[graft] def bigramLedger(docs: DataFrame): DataFrame = {
-    val tok = docs.select(col("lang"), col("doc_id"),
-      posexplode(split(col("text"), " ")).as(Seq("pos", "w")))
-    val wNext = Window.partitionBy(col("doc_id")).orderBy(col("pos").asc)
-    tok.withColumn("w2", lead(col("w"), 1).over(wNext))
-      .filter(col("w2").isNotNull)
-      .select(col("lang"), col("w").as("w1"), col("w2"))
-      .groupBy("lang", "w1", "w2").agg(count(lit(1)).as("c12"))
-  }
-
   private val textBigramKneserNey = Q(
     "text_bigram_kneser_ney",
     (s, d) => {
       import s.implicits._
       // the bigram count ledger feeds FOUR branches (ctx, cont, bt,
-      // and the scored join) — checkpointed so the tokenize + lead
-      // window + count collapse over the corpus runs ONCE, not once
-      // per branch (r16, guide §2.4). The ledger is distinct-bigram
-      // (Heaps-sublinear vocabulary), far below corpus scale.
-      val cb = bigramLedger(t(s, d, "documents")).localCheckpoint(true)
+      // and the scored join) — shared, so the tokenize + lead window +
+      // count collapse over the corpus runs ONCE per query
+      val wNext = Window.partitionBy($"doc_id").orderBy($"pos".asc)
+      val cb = Share(t(s, d, "documents")
+        .select($"lang", $"doc_id", posexplode(split($"text", " ")).as(Seq("pos", "w")))
+        .withColumn("w2", lead($"w", 1).over(wNext))
+        .filter($"w2".isNotNull)
+        .select($"lang", $"w".as("w1"), $"w2")
+        .groupBy("lang", "w1", "w2").agg(count(lit(1)).as("c12")))
       val ctx = cb.groupBy("lang", "w1")
         .agg(sum($"c12").as("c1"), count(lit(1)).as("nf"))
       val cont = cb.groupBy("lang", "w2").agg(count(lit(1)).as("nc"))
@@ -1713,7 +1693,7 @@ object CorpusOps {
   // excising spans (a corpus of 1%-overlap docs and one of 90%-overlap
   // docs have the same binary rate and need opposite treatments).
   // Same machinery as the filter: one gram pass, the tiny benchmark
-  // gram set Mat'd + BROADCAST, a map-side probe; per-doc hits/grams
+  // gram set BROADCAST, a map-side probe; per-doc hits/grams
   // collapse keyed by doc, the decile is an exact floor division
   // ((10·hits) div grams, 10 = fully contained), and the histogram is
   // a ≤11-row ledger. Docs with < 8 tokens have no grams and are
@@ -1726,9 +1706,7 @@ object CorpusOps {
       import s.implicits._
       val g8 = LlmPipeline.gramRows(s, d, 8)
         .select($"doc_id", md5($"x").as("g"))
-      val benchGrams = graft.core.Mat(s,
-        g8.filter($"doc_id" % 97 === 0).select("g").distinct(),
-        "contam-bench")
+      val benchGrams = g8.filter($"doc_id" % 97 === 0).select("g").distinct()
       val perDoc = g8.filter($"doc_id" % 97 =!= 0)
         .select($"doc_id", $"g").distinct()
         .join(broadcast(benchGrams.withColumn("hit", lit(1L))),

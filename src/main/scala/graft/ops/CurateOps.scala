@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.core.{Det, OSql, Q, Tables}
+import graft.core.{Cut, Det, OSql, Q, Share, Tables}
 
 /** Corpus-curation wave: the selection/sharding operators that sit
   * between cleaning and training in a large-scale data pipeline —
@@ -269,11 +269,9 @@ object CurateOps {
         .select($"lang", $"doc_id", $"n_chars",
           size(split($"text", " ")).cast("long").as("tok"))
       val wc = Window.partitionBy($"lang").orderBy($"n_chars".desc)
-      val cum = graft.core.Mat(s,
-        docs.groupBy($"lang", $"n_chars")
-          .agg(count(lit(1)).as("c"), sum($"tok").as("tk"))
-          .withColumn("hiTok", sum($"tk").over(wc)),
-        "budget-cells")
+      val cum = Share(docs.groupBy($"lang", $"n_chars")
+        .agg(count(lit(1)).as("c"), sum($"tok").as("tk"))
+        .withColumn("hiTok", sum($"tk").over(wc)))
       val full = cum.filter($"hiTok" <= 5000L)
         .groupBy("lang").agg(sum($"c").as("nf"), sum($"tk").as("tkf"))
       val crossing = cum.filter($"hiTok" > 5000L && $"hiTok" - $"tk" < 5000L)
@@ -320,11 +318,10 @@ object CurateOps {
     (s, d) => {
       import s.implicits._
       val k = 16
-      val ids = Windows.rankIds(
+      val ids = Cut(Windows.rankIds(
         t(s, d, "documents")
           .select($"doc_id", $"n_chars", md5($"doc_id".cast("string")).as("h")),
-        $"h".asc, $"doc_id".asc)
-        .localCheckpoint(true)
+        $"h".asc, $"doc_id".asc), "ntile-ids", s"$d/documents.parquet")
       val offs = Windows.prefixOffsets(
         ids.groupBy("pid").agg(count(lit(1)).as("n")), "pid")
       val tot = ids.agg(count(lit(1)).as("nn"))
@@ -378,11 +375,9 @@ object CurateOps {
         .select($"source", $"doc_id", $"n_chars",
           size(split($"text", " ")).cast("long").as("tok"))
       val wc = Window.partitionBy($"source").orderBy($"n_chars".desc)
-      val cum = graft.core.Mat(s,
-        docs.groupBy($"source", $"n_chars")
-          .agg(count(lit(1)).as("c"), sum($"tok").as("tk"))
-          .withColumn("hi", sum($"c").over(wc)),
-        "cap-cells")
+      val cum = Share(docs.groupBy($"source", $"n_chars")
+        .agg(count(lit(1)).as("c"), sum($"tok").as("tk"))
+        .withColumn("hi", sum($"c").over(wc)))
       val total = cum.groupBy("source").agg(sum($"c").as("n_total"))
       val full = cum.filter($"hi" <= 30L)
         .groupBy("source").agg(sum($"c").as("nf"), sum($"tk").as("tkf"))
@@ -564,12 +559,11 @@ object CurateOps {
       val iq = LlmPipeline2.quantizedComponents(s, d)
       val src = t(s, d, "documents").select($"doc_id".as("vec_id"), $"source")
       // the ONLY corpus pass: everything downstream (global centroid,
-      // norms, dot products, vector counts) reads this Mat'd
+      // norms, dot products, vector counts) reads this shared
       // |sources|·64 ledger, never the components again
-      val cs = graft.core.Mat(s, iq.join(src, "vec_id")
+      val cs = Share(iq.join(src, "vec_id")
         .groupBy($"source", $"pos")
-        .agg(sum($"q".cast(Dec38)).as("sq"), count(lit(1)).as("cnt")),
-        "centroid-led")
+        .agg(sum($"q".cast(Dec38)).as("sq"), count(lit(1)).as("cnt")))
       val cg = cs.groupBy($"pos").agg(sum($"sq").as("gq"))
       val nn = cs.groupBy($"source").agg(max($"cnt").as("n_vecs"))
       val g2 = cg.agg(sum($"gq" * $"gq").as("ng2"))
@@ -618,7 +612,7 @@ object CurateOps {
   // the smallest vec_id via one max(struct(d2, −vec_id)) aggregate —
   // per round: ONE broadcast join + two partial+final aggs, corpus
   // never shuffled on anything but map-side collapse. Centers
-  // accumulate through Mat so round r+1's plan reads a 4-row parquet,
+  // accumulate through Cut so round r+1's plan reads 4 cut rows,
   // not round r's whole lineage. Already-selected centers (d² = 0)
   // are anti-joined out of candidacy; round 3's d² IS the covering
   // radius of the first three centers.
@@ -629,15 +623,13 @@ object CurateOps {
     (s, d) => {
       import s.implicits._
       val iq = LlmPipeline2.quantizedComponents(s, d)
-      // the ≤4-row center table is lineage-cut per round with an eager
-      // localCheckpoint (not a Mat parquet round trip — a write+list+
-      // read job per round for 4 rows); each round's plan then reads
-      // materialized rows, never round r−1's whole lineage
-      var centers =
-        iq.agg(min($"vec_id").as("cid"))
-          .select($"cid", lit(0L).as("sel_round"),
-            lit(null).cast("long").as("d2"))
-          .localCheckpoint(true)
+      // the ≤4-row center table is lineage-cut per round ([[Cut]]);
+      // each round's plan then reads cut rows, never round r−1's whole
+      // lineage
+      val emb = s"$d/embeddings.parquet"
+      var centers = Cut(iq.agg(min($"vec_id").as("cid"))
+        .select($"cid", lit(0L).as("sel_round"), lit(null).cast("long").as("d2")),
+        "kcenter-r0", emb)
       for (r <- 1 to 3) {
         val cc = iq.join(broadcast(centers.select($"cid")),
             $"vec_id" === $"cid")
@@ -652,7 +644,7 @@ object CurateOps {
           .agg(max(struct($"dmin".as("a"), (-$"vec_id").as("b"))).as("m"))
           .select((-$"m.b").as("cid"), lit(r.toLong).as("sel_round"),
             $"m.a".as("d2"))
-        centers = centers.unionByName(nxt).localCheckpoint(true)
+        centers = Cut(centers.unionByName(nxt), s"kcenter-r$r", emb)
       }
       // a corpus with fewer than r+1 distinct points yields NULL
       // argmax rows — drop them so an empty/tiny corpus reports only
@@ -719,7 +711,8 @@ object CurateOps {
       val Dec38s = org.apache.spark.sql.types.DecimalType(38, 0)
       val e = Tables.events(s, d)
         .select($"event_id", round($"value" * 100).cast("long").as("c"))
-      val ids = Windows.rankIds(e, $"event_id".asc).localCheckpoint(true)
+      val ids = Cut(Windows.rankIds(e, $"event_id".asc), "systematic-ids",
+        s"$d/events.parquet")
       val offs = Windows.prefixOffsets(
         ids.groupBy("pid").agg(count(lit(1)).as("n")), "pid")
       val ranked = ids.join(broadcast(offs), "pid")

@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.{OSql, Q, Tables}
+import graft.core.{Cut, OSql, Q, Share, Tables}
 
 /** Iterative graph analytics beyond connected components
   * (`dedup_cluster`): link analysis over a graph DERIVED from the
@@ -190,7 +190,8 @@ object GraphOps {
       // star-sparsified candidate edges (LlmPipeline.starEdges):
       // identical components at Σ(m−1) edges per band bucket
       val edges = LlmPipeline.starEdges(s, d)
-      LlmPipeline.labeledClusters(s, LlmPipeline.starContraction(s, edges))
+      LlmPipeline.labeledClusters(s,
+        LlmPipeline.starContraction(s, edges, s"$d/documents.parquet"))
     },
     Some(LlmPipeline.clusterOracleSql))
 
@@ -221,23 +222,21 @@ object GraphOps {
     "graph_triangle_count",
     (s, d) => {
       import s.implicits._
-      // Materialize the edge set once (graft.core.Mat): five branches
-      // consume it (ordered set, degree table, both wedge sides, the
-      // closing semi-join) and without it each branch re-runs the band
-      // self-join that derives the candidate pairs.
-      val sym = graft.core.Mat(s,
-        LlmPipeline.candidateEdges(s, d), "tri-edges") // symmetric (v, u)
+      // the edge set is a projection of the cached candidate-pair
+      // artifact: five branches (ordered set, degree table, both wedge
+      // sides, the closing semi-join) each scan the artifact
+      val sym = LlmPipeline.candidateEdges(s, d) // symmetric (v, u)
       val ordered = sym.filter($"v" < $"u")
         .select($"v".as("a"), $"u".as("b"))
       val deg = sym.groupBy($"v".as("x")).agg(count(lit(1)).as("dg"))
       val withDeg = ordered
         .join(deg.select($"x".as("a"), $"dg".as("da")), "a")
         .join(deg.select($"x".as("b"), $"dg".as("db")), "b")
-      val oriented = graft.core.Mat(s, withDeg.select(
+      val oriented = Share(withDeg.select(
         when($"da" < $"db" || ($"da" === $"db" && $"a" < $"b"),
           struct($"a".as("s"), $"b".as("t")))
           .otherwise(struct($"b".as("s"), $"a".as("t"))).as("e"))
-        .select($"e.s".as("s"), $"e.t".as("t")), "tri-oriented")
+        .select($"e.s".as("s"), $"e.t".as("t")))
       // wedges at the orientation-minimum vertex; (t1 < t2) by id so the
       // closing edge lookup is the id-ordered set itself
       val e1 = oriented.select($"s", $"t".as("t1"))
@@ -300,9 +299,7 @@ object GraphOps {
     "graph_label_propagation",
     (s, d) => {
       import s.implicits._
-      val p = graft.core.Mat(s,
-        Tables.events(s, d).select($"user_id", $"event_type").distinct(),
-        "lp-pairs")
+      val p = Share(Tables.events(s, d).select($"user_id", $"event_type").distinct())
       val seed = p.select($"user_id").distinct()
         .withColumn("lu", pmod($"user_id", lit(3L)))
       // half-round 1: types adopt the majority label of their users
@@ -370,15 +367,13 @@ object GraphOps {
     "graph_hits",
     (s, d) => {
       import s.implicits._
-      // the edge list feeds all four half-step joins — materialize it
-      // once (eager localCheckpoint) instead of re-deriving the
-      // distinct per half-step when exchange reuse misses
-      val edges = Tables.events(s, d)
+      // the edge list feeds all four half-step joins — cut once, not
+      // shared: as a Share the half-steps made the key 12–41% slower
+      val edges = Cut(Tables.events(s, d)
         .filter($"user_id".isNotNull)
         .select(concat(lit("u:"), $"user_id".cast("string")).as("u"),
           concat(lit("t:"), $"event_type").as("t"))
-        .distinct()
-        .localCheckpoint(true)
+        .distinct(), "hits-edges", s"$d/events.parquet")
       var hubs: DataFrame = null
       var auths: DataFrame = null
       for (it <- 1 to 2) {

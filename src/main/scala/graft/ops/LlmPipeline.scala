@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.core.{Det, Mat, OSql, Q, Tables}
+import graft.core.{Cut, Det, OSql, Q, Tables}
 
 /** LLM-training-data pipeline operators (mandated surface beyond the
   * reference: dedup, text analysis, similarity search, multimodal).
@@ -407,20 +407,19 @@ object LlmPipeline {
     * Same labels either way, proven by the PropertySpec law that runs
     * both against a union-find oracle.
     *
-    * Eager localCheckpoint, not Mat: the loop needs its lineage CUT
-    * each round (otherwise round k re-executes all k−1 predecessors
-    * inside every join — exponential), but a parquet round trip per
-    * round pays ~0.5 s of job overhead × rounds. localCheckpoint keeps
-    * the tiny label table in executor memory; a production run on a
-    * fault-prone cluster would use reliable checkpoint() to a state
-    * dir instead — same plan, durable lineage cut.
+    * Every round is a [[Cut]]: the loop needs its lineage cut each
+    * round (otherwise round k re-executes all k−1 predecessors inside
+    * every join — exponential). On archives up to the cut's gate the
+    * tiny label table stays in executor memory; above it each round
+    * spills to scratch parquet. `archive` is the corpus the edges
+    * derive from.
     */
   private[graft] def connectedComponents(
-      s: SparkSession, edgesIn: DataFrame): Components = {
+      s: SparkSession, edgesIn: DataFrame, archive: String): Components = {
     import s.implicits._
-    val edges = edgesIn.localCheckpoint(true)
-    var labels = edges.select($"v").distinct()
-      .select($"v", $"v".as("lbl")).localCheckpoint(true)
+    val edges = Cut(edgesIn, "cc-edges", archive)
+    var labels = Cut(edges.select($"v").distinct()
+      .select($"v", $"v".as("lbl")), "cc-labels", archive)
     var iter = 0
     // Backstop only: a frontier that passed the round-2 probe has
     // collapsed to a thin tail (measured at the 10-copy corpus:
@@ -447,12 +446,11 @@ object LlmPipeline {
       // one job per round: the stepped table carries (old, new) label
       // so the convergence probe is a cheap count on checkpointed
       // data, not a second join
-      val stepped = labels.join(nbrMin, Seq("v"), "left")
+      val stepped = Cut(labels.join(nbrMin, Seq("v"), "left")
         .join(lblOfLbl, Seq("lbl"), "left")
         .select($"v", $"lbl",
           least($"lbl", coalesce($"nmin", $"lbl"),
-            coalesce($"plbl", $"lbl")).as("nlbl"))
-        .localCheckpoint(true)
+            coalesce($"plbl", $"lbl")).as("nlbl")), "cc-step", archive)
       // full count only inside the probe window (the ratio needs it);
       // after that the convergence check is the short-circuiting
       // isEmpty the tail rounds want
@@ -471,7 +469,7 @@ object LlmPipeline {
     System.err.println(s"[graft] cc: min-label rounds=$iter " +
       s"converged=$converged" +
       (if (switched) " -> starContraction" else ""))
-    Components(if (switched) starContraction(s, edges) else labels,
+    Components(if (switched) starContraction(s, edges, archive) else labels,
       iter, switched)
   }
 
@@ -487,7 +485,7 @@ object LlmPipeline {
     *
     * Each half-round is one groupBy(min) + one co-keyed join over the
     * edge table (the same two shapes as a Lloyd iteration — the plan a
-    * 1000-executor cluster wants), with a localCheckpoint lineage cut.
+    * 1000-executor cluster wants), with a [[Cut]] per half-round.
     * At convergence every component is a star centered at its minimum
     * id, so the label read-off is one neighborhood-min pass. The
     * convergence probe is count-gated: a changing round almost always
@@ -499,7 +497,7 @@ object LlmPipeline {
     * must be symmetric.
     */
   private[graft] def starContraction(
-      s: SparkSession, edgesIn: DataFrame): DataFrame = {
+      s: SparkSession, edgesIn: DataFrame, archive: String): DataFrame = {
     import s.implicits._
     def canon(e: DataFrame): DataFrame =
       e.filter($"a" =!= $"b")
@@ -508,9 +506,8 @@ object LlmPipeline {
     def sym(e: DataFrame): DataFrame =
       e.select($"a".as("v"), $"b".as("u"))
         .union(e.select($"b".as("v"), $"a".as("u")))
-    val verts = edgesIn.select($"v").distinct().localCheckpoint(true)
-    var cur = canon(edgesIn.select($"v".as("a"), $"u".as("b")))
-      .localCheckpoint(true)
+    val verts = Cut(edgesIn.select($"v").distinct(), "star-verts", archive)
+    var cur = Cut(canon(edgesIn.select($"v".as("a"), $"u".as("b"))), "star-edges", archive)
     var curCount = cur.count()
     var iter = 0
     val maxIter = 64 // ≫ log₂ of any representable vertex count
@@ -520,16 +517,15 @@ object LlmPipeline {
       // large-star: u > v joins m = min(Γ(v) ∪ {v})
       val mins = e.groupBy($"v").agg(min($"u").as("mn"))
         .select($"v", least($"v", $"mn").as("m"))
-      val afterLs = canon(
+      val afterLs = Cut(canon(
         e.join(mins, "v").filter($"u" > $"v")
-          .select($"u".as("a"), $"m".as("b"))).localCheckpoint(true)
+          .select($"u".as("a"), $"m".as("b"))), "star-large", archive)
       // small-star: smaller neighbors (and v) join v's min neighbor
       val sm = sym(afterLs).filter($"u" < $"v")
       val mins2 = sm.groupBy($"v").agg(min($"u").as("mn"))
-      val next = canon(
+      val next = Cut(canon(
         sm.join(mins2, "v").select($"u".as("a"), $"mn".as("b"))
-          .union(mins2.select($"v".as("a"), $"mn".as("b"))))
-        .localCheckpoint(true)
+          .union(mins2.select($"v".as("a"), $"mn".as("b")))), "star-small", archive)
       val nextCount = next.count()
       done = nextCount == curCount && next.except(cur).isEmpty
       cur = next
@@ -670,7 +666,7 @@ object LlmPipeline {
       // star-sparsified edges: identical components, Σ(m−1) edges per
       // bucket instead of Σm²/2 (see starEdges — the sf10 lesson)
       val edges = starEdges(s, d)
-      labeledClusters(s, connectedComponents(s, edges).labels)
+      labeledClusters(s, connectedComponents(s, edges, s"$d/documents.parquet").labels)
     },
     Some(clusterOracleSql))
 

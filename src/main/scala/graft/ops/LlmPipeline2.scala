@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.core.{Det, Mat, OSql, Q, Tables}
+import graft.core.{Cut, Det, OSql, Q, Tables}
 
 /** Training-data pipeline, second wave: the dedup family beyond MinHash
   * (SimHash, exact n-gram Jaccard verification, embedding-cosine
@@ -50,8 +50,8 @@ object LlmPipeline2 {
     * construction as the MinHash band guard) bounds any single bucket's
     * pair blowup, which keeps candidate volume O(N · cap) — never N².
     * The dispose stage is exact: bit_count(xor(sig_a, sig_b)) ≤ 3.
-    * The signature table is materialized once ([[graft.core.Mat]]) —
-    * it feeds both sides of the self-join.
+    * The signature table is cut once ([[graft.core.Cut]]) — it feeds
+    * both sides of the self-join.
     *
     * Why 64-bit: a 16-bit signature has 65,536 possible values, so at
     * corpus scale every value becomes a mega-collision-group of false
@@ -84,7 +84,9 @@ object LlmPipeline2 {
     */
   private[ops] def simhashChunks(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val sig = Mat(s, simhashSig(s, d), "simhash-sig")
+    // cut, not shared: as a Share the signature's readers made
+    // dedup_simhash 12–18% slower at sf0.1
+    val sig = Cut(simhashSig(s, d), "simhash-sig", s"$d/documents.parquet")
     val chunks = sig.select($"doc_id", $"simhash",
       explode(array((0 to 3).map(k => struct(lit(k).as("k"),
         shiftright($"simhash", 16 * k).bitwiseAND(lit(65535L)).as("c"))): _*)).as("kc"))
@@ -767,8 +769,8 @@ object LlmPipeline2 {
       // eager checkpoint outside the thunk would re-run an E-step on
       // every later caller that hits the cache.
       val a2 = graft.core.IndexCache(s, s"ivf-a2|K=$numCells|$d", {
-        val a1 = ivfAssign(ivfQrows(emb.filter(trainFilter)), c0, numCells)
-          .localCheckpoint(true)
+        val a1 = Cut(ivfAssign(ivfQrows(emb.filter(trainFilter)), c0, numCells),
+          "ivf-a1", s"$d/embeddings.parquet")
         ivfAssign(ivfQrows(emb), centroids(iqT, a1), numCells)
       })
       // the final centroid table is K×64 rows and probe-independent —
@@ -1443,8 +1445,8 @@ object LlmPipeline2 {
     val trained = graft.core.IndexCache(s, s"pq-cent|M=$numSub|K=$numCells|$d",
       graft.core.Sessions.withShufflePartitions(
         s, graft.core.Sessions.StreamStateShards) {
-        val aT = assign(iqTrain, c0).localCheckpoint(true)
-        centroids(aT).localCheckpoint(true)
+        val archive = s"$d/embeddings.parquet"
+        Cut(centroids(Cut(assign(iqTrain, c0), "pq-assign", archive)), "pq-cent", archive)
       })
     // full-corpus encode: one E-step pass against the trained codebook
     val codes = graft.core.IndexCache(s, s"pq-codes|M=$numSub|K=$numCells|$d",
@@ -1819,7 +1821,7 @@ object LlmPipeline2 {
     * per metric). IndexCache them like every other shared artifact:
     * the first gate pays the build (visible in `index_staging`), the
     * other two read the materialization — previously the exact scan
-    * alone was Mat'd THREE times under three names. The standalone
+    * alone was materialized THREE times under three names. The standalone
     * per-method keys (sim_ann_ivf, …) still run their pipelines live,
     * so the pipelines themselves stay benchmarked.
     */
@@ -1848,8 +1850,8 @@ object LlmPipeline2 {
     (s, d) => {
       import s.implicits._
       // Every side runs its WHOLE probe set in one pass: the exact scan
-      // joins the 3-row broadcast probe table once (one corpus scan, one
-      // Mat), and each index runs ONE batched probe pipeline via its
+      // joins the 3-row broadcast probe table once (one corpus scan), and
+      // each index runs ONE batched probe pipeline via its
       // *Multi sibling — 4 jobs total instead of 12 (3 probes × 4
       // pipelines), with per-probe sets provably identical (same cached
       // index artifacts, same tie rules, read off probe-partitioned
@@ -2821,7 +2823,10 @@ object LlmPipeline2 {
     "multimodal_dedup_phash",
     (s, d) => {
       import s.implicits._
-      val sig = Mat(s, phashSig(s, d), "phash-sig")
+      // cut, not shared: the signature is a narrow md5 projection with
+      // no exchange for reuse to catch, so each of the chunk table's
+      // readers would re-hash the corpus
+      val sig = Cut(phashSig(s, d), "phash-sig", s"$d/documents.parquet")
       val chunks = sig.select($"doc_id", $"phash",
         explode(array((0 to 3).map(k => struct(lit(k).as("k"),
           shiftright($"phash", 16 * k).bitwiseAND(lit(65535L)).as("c"))): _*))

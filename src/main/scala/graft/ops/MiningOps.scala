@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.core.{Det, Mat, OSql, Q, Tables}
+import graft.core.{Cut, Det, OSql, Q, Share, Tables}
 
 /** Graph mining, behavioral pattern matching, and recommendation-prep
   * operators: BFS hop distances, Adamic-Adar link prediction,
@@ -62,10 +62,11 @@ object MiningOps {
     * pairs) — unbounded in users — and `localCheckpoint` storage is
     * executor-local and non-replicated (an executor loss after the
     * checkpoint has no recompute path). So the materialization is
-    * size-gated on the archive (r15 VERDICT ask #9, [[Mat.gated]]):
-    * small corpora keep the in-memory checkpoint, anything above the
-    * threshold spills the edge list to scratch parquet (fault-
-    * tolerant, re-readable lineage) instead.
+    * size-gated on the archive ([[Cut]]): small corpora keep the
+    * in-memory checkpoint, anything above the threshold spills the edge
+    * list to scratch parquet (fault-tolerant, re-readable lineage)
+    * instead. Every round's cut is its own job, so a lazy [[Share]] of
+    * the edges would re-derive them once per round.
     */
   private def bfsDist(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
@@ -73,16 +74,15 @@ object MiningOps {
       .select(concat(lit("u:"), $"user_id".cast("string")).as("src"),
         concat(lit("t:"), $"event_type").as("dst"))
       .distinct()
-    val edges = Mat.gated(s,
-      pairs.unionByName(pairs.select($"dst".as("src"), $"src".as("dst"))),
-      "bfs-edges", s"$d/events.parquet")
+    val archive = s"$d/events.parquet"
+    val edges = Cut(pairs.unionByName(pairs.select($"dst".as("src"), $"src".as("dst"))),
+      "bfs-edges", archive)
     var dist = s.range(1).select(lit("t:purchase").as("node"), lit(0L).as("dist"))
     for (_ <- 1 to 4) {
       val relaxed = edges.join(dist, edges("src") === dist("node"))
         .select($"dst".as("node"), ($"dist" + 1).as("dist"))
-      dist = dist.unionByName(relaxed)
-        .groupBy("node").agg(min($"dist").as("dist"))
-        .localCheckpoint(true)
+      dist = Cut(dist.unionByName(relaxed)
+        .groupBy("node").agg(min($"dist").as("dist")), "bfs-dist", archive)
     }
     dist
   }
@@ -420,7 +420,7 @@ object MiningOps {
   // the standard dense-subgraph extraction; the stable set IS the
   // 2-core. Each round is one degree aggregate + one semi-join filter
   // per endpoint (the same co-partitioned superstep shape as the
-  // other iterative graph keys), on a Mat'd edge state (the
+  // other iterative graph keys), on a cut edge state (the
   // loop-until-stable discipline of dedup_cluster's cap-then-contract
   // fallback); peeling only removes edges, so an unchanged COUNT
   // proves an unchanged SET and one cheap count() per round is the
@@ -456,10 +456,10 @@ object MiningOps {
           .unionByName(edges.select($"b".as("n")))
           .groupBy("n").agg(count(lit(1)).as("dg"))
         val keep = deg.filter($"dg" >= 2).select("n")
-        val next = graft.core.Mat(s, edges
+        val next = Cut(edges
           .join(keep.select($"n".as("a")), Seq("a"), "left_semi")
           .join(keep.select($"n".as("b")), Seq("b"), "left_semi")
-          .select("a", "b"), s"kcore-r$r")
+          .select("a", "b"), s"kcore-r$r", s"$d/lineitem.parquet")
         val c = next.count()
         if (c == edgeCnt) stableAt = r
         else { edges = next; edgeCnt = c; r += 1 }
@@ -812,20 +812,17 @@ object MiningOps {
       val e = coEdges(s, d) // canonical a < b, distinct
       val sym = e.select($"a".as("n"), $"b".as("m"))
         .unionByName(e.select($"b".as("n"), $"a".as("m")))
-      // node-bounded degree ledger, materialized: three join branches
-      // (both orientation sides + the coefficient join) each re-ran
-      // the 2×-edge union + count when left lazy (r16, guide §2.4);
-      // node count grows with the archive, so the cut is size-gated
-      val deg = Mat.gated(s, sym.groupBy($"n").agg(count(lit(1)).as("dg")),
-        "lcc-degree", s"$d/lineitem.parquet")
+      // node-bounded degree ledger, shared: three join branches (both
+      // orientation sides + the coefficient join) read it
+      val deg = Share(sym.groupBy($"n").agg(count(lit(1)).as("dg")))
       val withDeg = e
         .join(deg.select($"n".as("a"), $"dg".as("da")), "a")
         .join(deg.select($"n".as("b"), $"dg".as("db")), "b")
-      val oriented = graft.core.Mat(s, withDeg.select(
+      val oriented = Share(withDeg.select(
           when($"da" < $"db" || ($"da" === $"db" && $"a" < $"b"),
             struct($"a".as("s"), $"b".as("t")))
             .otherwise(struct($"b".as("s"), $"a".as("t"))).as("e"))
-        .select($"e.s".as("s"), $"e.t".as("t")), "lcc-oriented")
+        .select($"e.s".as("s"), $"e.t".as("t")))
       val wedges = oriented.select($"s", $"t".as("t1"))
         .join(oriented.select($"s", $"t".as("t2")), Seq("s"))
         .filter($"t1" < $"t2")

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
-import graft.core.{Det, OSql, Q, Tables}
+import graft.core.{Det, OSql, Q, Share, Tables}
 
 /** Statistical inference and ML feature-engineering operators — the
   * experimentation layer a replay consumer runs over the landed
@@ -835,13 +835,12 @@ object MlStatOps {
       val minN = e.groupBy("event_type").agg(count(lit(1)).as("cnt"))
         .agg(min($"cnt").as("min_n"))
       val wc = Window.partitionBy($"event_type").orderBy($"cell".asc)
-      // (type, cell) ledger with cumulative counts — Mat'd: the full
+      // (type, cell) ledger with cumulative counts — shared: the full
       // and crossing branches both read it
-      val cum = graft.core.Mat(s,
-        e.groupBy($"event_type", $"cell")
+      val cum = Share(e.groupBy($"event_type", $"cell")
           .agg(count(lit(1)).as("c"), sum($"event_id").as("ids"))
-          .withColumn("hi", sum($"c").over(wc)),
-        "cbal-cells").crossJoin(broadcast(minN))
+          .withColumn("hi", sum($"c").over(wc)))
+        .crossJoin(broadcast(minN))
       val full = cum.filter($"hi" <= $"min_n")
         .groupBy("event_type").agg(sum($"c").as("nf"), sum($"ids").as("idsf"))
       val crossing = cum.filter($"hi" - $"c" < $"min_n" && $"min_n" < $"hi")
@@ -3694,7 +3693,7 @@ object MlStatOps {
   // controls FDR under independence/PRDS; BY divides the threshold by
   // the harmonic number c(m) = Σ1/i and holds under ANY dependence —
   // the conservative default when the per-type hypotheses share the
-  // same archive). Same permutation p-values, same Mat'd |types|-row
+  // same archive). Same permutation p-values, same |types|-row
   // ledger and broadcast theta-rank — but the threshold test is FULLY
   // INTEGER: with the harmonic quantized as Hq = Σ_{i≤m}(10⁹ div i)
   // (an exact integer both engines reproduce term by term), p ≤

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.core.{Det, OSql, Q, Tables}
+import graft.core.{Cut, Det, OSql, Q, Tables}
 
 /** Training-run staging operators: the passes that turn a cleaned,
   * deduplicated corpus into what a trainer actually consumes —
@@ -26,8 +26,8 @@ object PackOps {
   /** Phase 1 of [[corpusPackSequences]] before its lineage cut — the
     * range-partitioned, locally-sorted token table with
     * `monotonically_increasing_id` encoding (partition, offset). Split
-    * out so PlanSpec can pin the range exchange (the localCheckpoint
-    * severs the executed plan downstream).
+    * out so PlanSpec can pin the range exchange (the [[Cut]] severs
+    * the executed plan downstream).
     */
   private[graft] def packIdsPlan(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
@@ -51,7 +51,7 @@ object PackOps {
     * window, then P partition subtotals roll into broadcast offsets —
     * ONE range shuffle of the token table plus a P-row aggregate, the
     * shape a 1000-executor packing run needs. The id table is
-    * materialized once (localCheckpoint) because range boundaries are
+    * cut once ([[Cut]]) because range boundaries are
     * sampled; the result is boundary-invariant because doc_id is unique
     * and the cumsum depends only on global order. The oracle is the
     * plain global-window spelling — the hash match proves the two-phase
@@ -61,7 +61,7 @@ object PackOps {
     "corpus_pack_sequences",
     (s, d) => {
       import s.implicits._
-      val ids = packIdsPlan(s, d).localCheckpoint(true)
+      val ids = Cut(packIdsPlan(s, d), "pack-ids", s"$d/documents.parquet")
       val local = ids.withColumn("lcum",
         sum($"tok").over(Window.partitionBy($"pid").orderBy($"doc_id")) - $"tok")
       // cumulative token offsets over the P partition subtotals — the

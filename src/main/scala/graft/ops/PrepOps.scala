@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
-import graft.core.{Det, OSql, Q, Tables}
+import graft.core.{Cut, Det, OSql, Q, Tables}
 
 /** Training-corpus preparation operators, wave 2: span-level exact
   * dedup, stride chunking, the distributed Gram matrix, and the fused
@@ -269,15 +269,15 @@ object PrepOps {
         .select(transform($"embedding",
           x => floor(x * lit(1e6)).cast("long")).as("q"))
       // one-pass gram_sum (see embedding_gram) — the corpus pass runs
-      // ONCE and the ≤d(d+1)/2-row upper triangle is locally
-      // checkpointed (bounded by the dimension, never the corpus), so
-      // the three power-iteration joins and the dim probe all consume
-      // the tiny materialized table instead of re-deriving the Gram.
-      val up = q.agg(graft.functions.GramAggregate.gramSum(s, $"q").as("cells"))
+      // ONCE and the ≤d(d+1)/2-row upper triangle is cut (bounded by
+      // the dimension, never the corpus): each power round runs as its
+      // own job, and all three and the dim probe read the tiny cut
+      // table instead of re-deriving the Gram.
+      val emb = s"$d/embeddings.parquet"
+      val up = Cut(q.agg(graft.functions.GramAggregate.gramSum(s, $"q").as("cells"))
         .select(explode($"cells").as("c"))
         .select($"c.i".as("i0"), $"c.j".as("j0"),
-          $"c.g".cast(Dec380).as("g"))
-        .localCheckpoint(true)
+          $"c.g".cast(Dec380).as("g")), "pca-gram", emb)
       // full matrix from the upper triangle (g is symmetric): upper ∪
       // mirrored strict-upper — exactly the row set the unrestricted
       // pair explode produced.
@@ -291,13 +291,12 @@ object PrepOps {
         lit(1000000L).cast(Dec380).as("v"))
       var lastM: DataFrame = null
       for (_ <- 1 to 3) {
-        // checkpoint each round's ≤d-row w vector: v, lastM, and the
+        // cut each round's ≤d-row w vector: v, lastM, and the
         // next round's join all branch from it, so left lazy the
         // logical tree re-nests the whole prior iteration per branch
         // (the 4177-line plan this cut removes — r16, guide §7.2)
-        val w = gram.join(v.select($"i".as("j"), $"v"), Seq("j"))
-          .groupBy("i").agg(sum($"g" * $"v").as("w"))
-          .localCheckpoint(true)
+        val w = Cut(gram.join(v.select($"i".as("j"), $"v"), Seq("j"))
+          .groupBy("i").agg(sum($"g" * $"v").as("w")), "pca-round", emb)
         lastM = w.agg(max(abs($"w")).as("m"))
         v = w.crossJoin(broadcast(lastM))
           .select($"i",

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.core.{Det, Mat, OSql, Q, Tables, TmpDirs}
+import graft.core.{Cut, Det, OSql, Q, Share, Tables, TmpDirs}
 
 /** Scale-technique operators: the join/storage/ingest patterns a 100 TB
   * deployment leans on, each demonstrated as a first-class verified
@@ -167,7 +167,7 @@ object ScaleOps {
     "join_bucketed",
     // materialize inside the tables' lifetime (the catalog cleanup in
     // the finally runs before the caller consumes the DataFrame)
-    (s, d) => withBucketedJoin(s, d)(_.localCheckpoint(true)),
+    (s, d) => withBucketedJoin(s, d)(Cut(_, "bucketed-join", s"$d/lineitem.parquet")),
     Some("SELECT o_orderpriority, count(*) AS cnt, " +
       OSql.msum("l_extendedprice") + " AS revenue " +
       "FROM lineitem JOIN orders ON l_orderkey = o_orderkey " +
@@ -550,10 +550,10 @@ object ScaleOps {
     import s.implicits._
     // The campaign calendar: one row per archive day, campaign id
     // derived deterministically from the day-of-month so both engines
-    // build the identical dimension. Materialized as its own parquet
-    // (a genuine filterable dim scan, not a foldable local relation).
-    val dim = Mat(s, s.read.parquet(dir).select($"dt").distinct()
-      .select($"dt", (dayofmonth($"dt") % 5).cast("int").as("campaign")), "dpp-dim")
+    // build the identical dimension. Cut to its own relation (a
+    // genuine filterable dim scan, not a foldable local relation).
+    val dim = Cut(s.read.parquet(dir).select($"dt").distinct()
+      .select($"dt", (dayofmonth($"dt") % 5).cast("int").as("campaign")), "dpp-dim", dir)
     s.read.parquet(dir)
       .join(dim.filter($"campaign" === 2).select("dt"), Seq("dt"))
       .groupBy($"dt".cast("string").as("dt"), $"event_type")
@@ -592,7 +592,7 @@ object ScaleOps {
     * oracle (the plain join) proves the bloom filter dropped no row it
     * shouldn't: false positives only, never false negatives.
     *
-    * Execution happens INSIDE the conf scope (localCheckpoint, the
+    * Execution happens INSIDE the conf scope ([[Cut]], the
     * join_bucketed pattern) because runtime-filter injection runs at
     * optimization time — a lazily returned plan would optimize after
     * the confs were restored.
@@ -625,7 +625,7 @@ object ScaleOps {
 
   private val joinRuntimeFilter = Q(
     "join_runtime_filter",
-    (s, d) => withRuntimeFilterJoin(s, d)(_.localCheckpoint(true)),
+    (s, d) => withRuntimeFilterJoin(s, d)(Cut(_, "runtime-filter-join", s"$d/lineitem.parquet")),
     Some("SELECT o_orderpriority, count(*) AS cnt, " +
       OSql.msum("l_extendedprice") + " AS revenue " +
       "FROM lineitem JOIN orders ON l_orderkey = o_orderkey " +
@@ -694,9 +694,8 @@ object ScaleOps {
       // exchange: OptimizeSkewedJoin only matches SMJ(Sort(stage),
       // Sort(stage)), and the distinct's post-shuffle HashAggregate would
       // otherwise sit between the Sort and the stage and mask the skew
-      val dim = fact.select($"k").distinct()
-        .withColumn("grp", pmod($"k", lit(5L)))
-        .localCheckpoint(true)
+      val dim = Cut(fact.select($"k").distinct()
+        .withColumn("grp", pmod($"k", lit(5L))), "skew-dim", s"$d/lineitem.parquet")
       val df = fact.join(dim, "k")
         .groupBy("grp")
         .agg(count(lit(1)).as("cnt"), moneySum($"l_extendedprice").as("revenue"))
@@ -709,7 +708,7 @@ object ScaleOps {
 
   private val joinSkewAqe = Q(
     "join_skew_aqe",
-    (s, d) => withSkewAqeJoin(s, d)(_.localCheckpoint(true)),
+    (s, d) => withSkewAqeJoin(s, d)(Cut(_, "skew-join", s"$d/lineitem.parquet")),
     Some("WITH f AS (SELECT CASE WHEN l_orderkey % 10 < 3 THEN 0 " +
       "ELSE l_orderkey END AS k, l_extendedprice FROM lineitem) " +
       "SELECT k % 5 AS grp, count(*) AS cnt, " +
@@ -760,14 +759,14 @@ object ScaleOps {
     * ONE range shuffle of the fact + a P-row aggregate — the plan shape
     * a 1000-executor global rank needs. The range boundaries are
     * sampled (non-deterministic between runs), so the id table is
-    * materialized once (localCheckpoint) and both phases read the SAME
+    * cut once ([[Cut]]) and both phases read the SAME
     * partitioning; the final rank is boundary-invariant because the
     * sort key (price, orderkey) is unique. Oracle: the plain global
     * row_number — the hash match proves the two-phase plan is a pure
     * plan change.
     */
   /** Phase 1 of [[windowRankDistributed]] before its lineage cut —
-    * split out so PlanSpec can pin the range exchange (the checkpoint
+    * split out so PlanSpec can pin the range exchange (the cut
     * severs the executed plan, hiding phase 1 from the final query's
     * plan text).
     */
@@ -781,7 +780,7 @@ object ScaleOps {
     "window_rank_distributed",
     (s, d) => {
       import s.implicits._
-      val ids = rankIdsPlan(s, d).localCheckpoint(true)
+      val ids = Cut(rankIdsPlan(s, d), "rank-ids", s"$d/orders.parquet")
       // cumulative offsets over the P partition counts — the broadcast
       // prefix-sum theta-join (no WindowExec even on the P-row ledger)
       val offs = Windows.prefixOffsets(
@@ -929,9 +928,9 @@ object ScaleOps {
     * artifact; when a new day of raw data arrives, only ITS partials
     * are computed and the final answer is an algebraic merge of stored
     * ∪ delta — the raw history is never rescanned. Here days with
-    * day%4==3 play the newly-arrived delta and the rest are
-    * materialized to scratch parquet first (the "stored" view state,
-    * via [[Mat]]); the merge is a groupBy over partials whose row count
+    * day%4==3 play the newly-arrived delta and the rest the "stored"
+    * view state; both read one shared partial aggregate ([[Share]]);
+    * the merge is a groupBy over partials whose row count
     * is days×types, not events. Correctness hinges on the partials
     * carrying ALGEBRAIC state — count and exact DECIMAL sums (both
     * engines sum decimals exactly, so merge order cannot matter); avg
@@ -942,10 +941,10 @@ object ScaleOps {
     "agg_incremental",
     (s, d) => {
       import s.implicits._
-      val partials = Tables.events(s, d)
+      val partials = Share(Tables.events(s, d)
         .groupBy(expr("ms div 86400000").as("day"), $"event_type")
-        .agg(count(lit(1)).as("cnt"), sum($"value".cast(Dec)).as("sval"))
-      val stored = Mat(s, partials.filter(!($"day" % 4 === 3)), "agg-inc-base")
+        .agg(count(lit(1)).as("cnt"), sum($"value".cast(Dec)).as("sval")))
+      val stored = partials.filter(!($"day" % 4 === 3))
       val delta = partials.filter($"day" % 4 === 3)
       stored.unionByName(delta)
         .groupBy("event_type")
@@ -1649,15 +1648,11 @@ object ScaleOps {
       // THREE branches (filter bits, absent-probe spine, present
       // probes) consume the distinct-user set, and two consume the
       // ≤4096-bit ledger — materialized once each instead of
-      // re-running the distinct shuffle per branch (r16, guide §2.4;
-      // u is sub-corpus and size-gated, bits is bounded)
-      val u = graft.core.Mat.gated(s,
-        Tables.events(s, d)
-          .filter($"user_id".isNotNull).select($"user_id").distinct(),
-        "bloom-users", s"$d/events.parquet")
-      val bits = u.withColumn("dep", explode(sequence(lit(0), lit(3))))
-        .select(expr(bloomHashExpr("dep", "user_id")).as("bit")).distinct()
-        .localCheckpoint(true)
+      // re-running the distinct shuffle per branch (both shared)
+      val u = Share(Tables.events(s, d)
+        .filter($"user_id".isNotNull).select($"user_id").distinct())
+      val bits = Share(u.withColumn("dep", explode(sequence(lit(0), lit(3))))
+        .select(expr(bloomHashExpr("dep", "user_id")).as("bit")).distinct())
       val absent = u.agg(max($"user_id").as("mx"))
         .select(explode(sequence($"mx" + 1, $"mx" + 100)).as("probe_id"))
       val probes = u.select($"user_id".as("probe_id"), lit(1L).as("present"))
@@ -1863,12 +1858,10 @@ object ScaleOps {
         .withColumn("h", expr(cmsHashExpr("dep", "user_id")))
         .groupBy("event_type", "dep", "h").agg(count(lit(1)).as("c"))
         .groupBy("dep", "h").agg(sum($"c").cast("long").as("cnt"))
-      // the 10-row top table feeds BOTH probe joins — checkpointed so
-      // the exact-count corpus pass behind it runs once, not twice
-      // (r16, guide §2.4)
-      val top = u.groupBy("user_id").agg(count(lit(1)).as("exact_cnt"))
-        .orderBy($"exact_cnt".desc, $"user_id".asc).limit(10)
-        .localCheckpoint(true)
+      // the 10-row top table feeds BOTH probe joins — shared so the
+      // exact-count corpus pass behind it runs once, not twice
+      val top = Share(u.groupBy("user_id").agg(count(lit(1)).as("exact_cnt"))
+        .orderBy($"exact_cnt".desc, $"user_id".asc).limit(10))
       val probes = top
         .withColumn("dep", explode(sequence(lit(0), lit(3))))
         .withColumn("h", expr(cmsHashExpr("dep", "user_id")))
@@ -2085,14 +2078,12 @@ object ScaleOps {
       val direct = u.select($"user_id").distinct()
         .withColumn("dep", explode(sequence(lit(0), lit(3))))
         .select(expr(bloomHashExpr("dep", "user_id")).as("bit")).distinct()
-      // bounded per-shard bit ledger (≤4096·|types| rows), checkpointed:
-      // the OR-merge and the shard stats both consume it, and each lazy
-      // branch re-ran the corpus explode+distinct (r16, guide §2.4)
-      val shards = u
+      // bounded per-shard bit ledger (≤4096·|types| rows), shared: the
+      // OR-merge and the shard stats both consume it
+      val shards = Share(u
         .withColumn("dep", explode(sequence(lit(0), lit(3))))
         .select($"event_type", expr(bloomHashExpr("dep", "user_id")).as("bit"))
-        .distinct()
-        .localCheckpoint(true)
+        .distinct())
       val merged = shards.select($"bit").distinct()
       val shardStats = shards
         .agg(countDistinct($"event_type").as("n_shards"),
@@ -2326,7 +2317,7 @@ object ScaleOps {
         .filter(pmod($"event_id", lit(97L)) =!= 13L)
         .select($"event_id".as("id")).distinct()
       val ranked = {
-        val r = Windows.rankIds(ids, $"id".asc).localCheckpoint(true)
+        val r = Cut(Windows.rankIds(ids, $"id".asc), "gap-ids", s"$d/events.parquet")
         val offs = Windows.prefixOffsets(
           r.groupBy("pid").agg(count(lit(1)).as("n")), "pid")
         r.join(broadcast(offs), "pid")
@@ -2335,7 +2326,7 @@ object ScaleOps {
       val islands = ranked.withColumn("k", $"id" - $"rn")
         .groupBy("k").agg(min($"id").as("st"), max($"id").as("en"))
       val iRanked = {
-        val r = Windows.rankIds(islands, $"st".asc).localCheckpoint(true)
+        val r = Cut(Windows.rankIds(islands, $"st".asc), "gap-islands", s"$d/events.parquet")
         val offs = Windows.prefixOffsets(
           r.groupBy("pid").agg(count(lit(1)).as("n")), "pid")
         r.join(broadcast(offs), "pid")

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
-import graft.core.{Det, OSql, Q, Tables}
+import graft.core.{Cut, Det, OSql, Q, Share, Tables}
 
 /** Ordered-sequence analytics over the landed event archive: run-length
   * islands, Markov transition structure, interval concurrency, funnel
@@ -144,20 +144,17 @@ object SeqOps {
       val ev = Tables.events(s, d).select($"ms")
       val ep = ev.select($"ms".as("t"), lit(1L).as("delta"))
         .unionAll(ev.select(($"ms" + 30000L).as("t"), lit(-1L).as("delta")))
-      val ids = ep
+      val ids = Cut(ep
         .repartitionByRange(32, $"t".asc, $"delta".asc)
         .sortWithinPartitions($"t".asc, $"delta".asc)
         .withColumn("mid", monotonically_increasing_id())
-        .withColumn("pid", shiftright($"mid", 33))
-        .localCheckpoint(true)
+        .withColumn("pid", shiftright($"mid", 33)), "conc-ids", s"$d/events.parquet")
       val local = Window.partitionBy($"pid").orderBy($"mid".asc)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      // ≤32-row per-pid delta ledger, checkpointed: the offsets
-      // theta-join consumes it on both sides, and without the cut each
-      // side re-passes the 2N-row endpoint table (r16, guide §2.4)
+      // ≤32-row per-pid delta ledger (prefixOffsets shares it across
+      // both sides of its theta-join)
       val offs = Windows.prefixOffsets(
-        ids.groupBy("pid").agg(sum($"delta").as("n"))
-          .localCheckpoint(true), "pid")
+        ids.groupBy("pid").agg(sum($"delta").as("n")), "pid")
       val r = ids
         .withColumn("cum", sum($"delta").over(local))
         .join(broadcast(offs), "pid")
@@ -269,18 +266,13 @@ object SeqOps {
     "agg_histogram_equidepth",
     (s, d) => {
       import s.implicits._
-      val ids = Windows.rankIds(
+      val ids = Cut(Windows.rankIds(
         Tables.events(s, d).select($"event_id", $"value"),
-        $"value".asc, $"event_id".asc)
-        .localCheckpoint(true)
-      // the per-pid count ledger (≤32 rows, checkpointed so its one
-      // pass over the ranked corpus is shared) serves BOTH prefix
-      // sides of the offsets theta-join AND the global total — the
-      // total used to be a second full pass over the checkpointed
-      // corpus and each theta side a third/fourth (r16, guide §2.4:
-      // 4 passes over the ranked table → 2)
-      val cnts = ids.groupBy("pid").agg(count(lit(1)).as("n"))
-        .localCheckpoint(true)
+        $"value".asc, $"event_id".asc), "hist-ids", s"$d/events.parquet")
+      // the per-pid count ledger (≤32 rows, shared so its one pass over
+      // the ranked corpus serves BOTH prefix sides of the offsets
+      // theta-join AND the global total)
+      val cnts = Share(ids.groupBy("pid").agg(count(lit(1)).as("n")))
       val offs = Windows.prefixOffsets(cnts, "pid")
       val tot = cnts.agg(sum($"n").cast("long").as("nn"))
       ids.join(broadcast(offs), "pid")
@@ -795,8 +787,10 @@ object SeqOps {
       // the fact-sized window pass per lineage branch. Every channel
       // state appears as a dst (the start→first edge covers journey
       // heads), so the variant list reads off the ledger too.
-      val ed = trans.groupBy("src", "dst").agg(count(lit(1)).as("cnt"))
-        .localCheckpoint(true)
+      // It is cut, not shared: the cut edge table below reads it in its
+      // own job, and the final query reads it again through `vv`.
+      val ed = Cut(trans.groupBy("src", "dst").agg(count(lit(1)).as("cnt")),
+        "markov-ledger", s"$d/events.parquet")
       val tt = ed.groupBy("src").agg(sum($"cnt").cast("long").as("tot"))
       val channels = ed.select($"dst".as("state")).distinct()
         .filter($"state" =!= "conv" && $"state" =!= "null")
@@ -814,8 +808,10 @@ object SeqOps {
       // ledger-sized agg, so the whole propagation (including the
       // recomputed step prefixes under the conv-accumulator unions) is
       // ONE job over tiny relations — cheaper than 8 materialization
-      // jobs would be.
-      val edB = broadcast(edV.localCheckpoint(true))
+      // jobs would be. The edge table they all read is cut, not shared:
+      // the unrolled steps read it 36 times, and as a lazy share each
+      // read plans the shared subtree again.
+      val edB = broadcast(Cut(edV, "markov-edges", s"$d/events.parquet"))
       var m = vv.select($"variant", lit("start").as("state"),
         lit(1000000000L).as("mass"))
       var acc: DataFrame = null

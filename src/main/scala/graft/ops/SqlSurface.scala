@@ -1,7 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.core.{Q, Tables}
+import graft.core.{Cut, Q, Tables}
 
 /** The declarative SQL entry surface: correlated subqueries (EXISTS,
   * NOT IN, correlated scalar), LATERAL per-group top-k, and the multiset
@@ -224,10 +224,10 @@ object SqlSurface {
     "sql_recursive_cte",
     (s, d) => {
       import org.apache.spark.sql.functions._
-      val users = Tables.events(s, d)
+      // cut: the recursive CTE reads it once per depth, each its own job
+      val users = Cut(Tables.events(s, d)
         .filter(col("user_id").isNotNull && col("user_id") >= 0)
-        .select(col("user_id").as("u")).distinct()
-        .localCheckpoint(true)
+        .select(col("user_id").as("u")).distinct(), "rc-users", s"$d/events.parquet")
       users.createOrReplaceTempView("rc_users")
       // Broadcast the frontier only when its expected size is
       // broadcast-safe: the per-depth frontier averages N/log₂(maxId)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, IntegerType, StructField, StructType}
-import graft.core.{Det, OSql, Q, Tables}
+import graft.core.{Det, OSql, Q, Share, Tables}
 
 /** Distributional profiling, attribution, and snapshot-lifecycle
   * operators — the data-quality and reporting layer a replay consumer
@@ -139,10 +139,9 @@ object StatOps {
   // at 100 TB, pruned column scans beat a full range repartition by
   // orders of magnitude of shuffled bytes. Deployment knobs: widths
   // narrow with N, and each extra DEPTH level divides the final
-  // window's input by another 256. The tiny ledgers and 3-row
-  // crossing tables are lineage-cut with eager localCheckpoints —
-  // each feeds several consumers, and left lazy every branch would
-  // re-run a fact scan.
+  // window's input by another 256. The tiny ledgers and the level-1
+  // crossing table are shared ([[graft.core.Share]]) — each feeds
+  // several consumers, and no branch re-runs a fact scan.
   // ------------------------------------------------------------------
 
   private val aggWeightedMedian = Q(
@@ -183,33 +182,26 @@ object StatOps {
             ($"t.cum0" + $"t.base").as("cum0"), $"t.tw".as("tw"))
       }
       // level 1: coarse ledger → crossing coarse cell per group. The
-      // ≤256·G-row ledger needs its lineage CUT (it feeds the group
-      // totals, both theta-join branches, and the crossing pick — left
-      // lazy, every consumer would re-run the fact scan; no cross-
-      // branch subtree sharing in Catalyst). Eager localCheckpoint,
-      // not a Mat parquet round trip: the ledger is bounded (cells ×
-      // groups), so holding it as executor-memory blocks costs nothing
-      // at any corpus size and saves a write+list+read job per level —
-      // the measured Mat overhead was ~0.4 s of this key's 2.8 s.
-      val cl1 = withC1(li0).groupBy($"l_returnflag", $"c1")
-        .agg(sum($"w").as("sw")).localCheckpoint(true)
+      // ≤256·G-row ledger feeds the group totals, both theta-join
+      // branches, and the crossing pick, so it is shared
+      val cl1 = Share(withC1(li0).groupBy($"l_returnflag", $"c1")
+        .agg(sum($"w").as("sw")))
       val tw = cl1.groupBy($"l_returnflag").agg(sum($"sw").as("tw"))
       val l1 = cl1.join(broadcast(tw), "l_returnflag")
         .withColumn("cum0", lit(0L))
-      // the 3-row crossing tables are pinned the same way so the
-      // downstream queries broadcast materialized rows instead of
-      // re-running the pick subtree
-      val t1 = broadcast(crossing(l1, "c1", $"cum0").localCheckpoint(true))
+      // the 3-row level-1 crossing table feeds the fine ledger and the
+      // finish, so it is shared the same way
+      val t1 = broadcast(Share(crossing(l1, "c1", $"cum0")))
       // level 2: ≤256 fine cells WITHIN the crossing coarse cell
       def withC2(df: DataFrame) = withC1(df)
         .join(t1, Seq("l_returnflag", "c1"))
         .withColumn("c2", expr(s"(c - c1 * $W1) div $W2"))
-      val l2 = withC2(li0)
+      val l2 = Share(withC2(li0)
         .groupBy($"l_returnflag", $"c1", $"c2", $"cum0", $"tw")
-        .agg(sum($"w").as("sw")).localCheckpoint(true)
+        .agg(sum($"w").as("sw")))
       val t2 = broadcast(
         crossing(l2.select($"l_returnflag", $"c2", $"sw", $"tw", $"cum0"),
-          "c2", $"cum0").localCheckpoint(true))
+          "c2", $"cum0"))
       // finish: running sum over ONLY the crossing fine cell's rows
       val wloc = Window.partitionBy($"c1", $"c2", $"l_returnflag")
         .orderBy($"l_extendedprice".asc, $"l_orderkey".asc,

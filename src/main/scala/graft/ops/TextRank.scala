@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.core.{Det, OSql, Q, Tables}
+import graft.core.{Det, OSql, Q, Share, Tables}
 
 /** Corpus relevance ranking: TF-IDF term extraction and BM25 document
   * retrieval — the search/retrieval half of a training-data pipeline
@@ -44,14 +44,11 @@ object TextRank {
     "text_tfidf",
     (s, d) => {
       import s.implicits._
-      // Materialize tf once (graft.core.Mat): three branches consume it
-      // (dl, df, the scoring join) and Catalyst has no cross-branch
-      // subtree sharing — without this the corpus would be scanned and
-      // token-exploded three times. The tf table is the per-doc
-      // vocabulary, the thing a real indexer persists anyway.
-      val tf = graft.core.Mat(s, docs(s, d)
+      // Share tf: three branches consume it (dl, df, the scoring join),
+      // and the corpus is scanned and token-exploded once per query
+      val tf = Share(docs(s, d)
         .select($"doc_id", explode(split($"text", " ")).as("w"))
-        .groupBy("doc_id", "w").agg(count(lit(1)).as("cnt")), "tfidf-tf")
+        .groupBy("doc_id", "w").agg(count(lit(1)).as("cnt")))
       val dl = tf.groupBy("doc_id").agg(sum($"cnt").cast("long").as("n_tok"))
       val df = tf.groupBy("w").agg(count(lit(1)).as("df"))
       val n = docs(s, d).agg(count(lit(1)).as("n_docs"))

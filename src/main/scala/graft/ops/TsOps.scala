@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.core.{Det, OSql, Q, Tables}
+import graft.core.{Det, OSql, Q, Share, Tables}
 
 /** Time-series repair, forecasting, and distribution-drift operators —
   * the monitoring layer a replay consumer runs over the landed archive:
@@ -42,21 +42,17 @@ object TsOps {
     * grid change (rounding, bucketing) lands here and stays in sync
     * across every consumer and its oracle.
     *
-    * Eagerly checkpointed (r16, guide §2.4): the grid is
-    * CALENDAR-BOUNDED (|types| × spanned hours — ~2.4k rows at sf0.1,
-    * growing with the time span, never the corpus), but almost every
-    * consumer branches over it several times (seasonal profile +
-    * residual + moments; lag spines; decompositions), and each lazy
-    * branch re-ran the fact-scale hourly collapse. One materialization
-    * = one corpus pass per query regardless of branch count.
+    * Shared ([[Share]]): almost every consumer branches over the
+    * CALENDAR-BOUNDED grid several times (seasonal profile + residual +
+    * moments; lag spines; decompositions), and the fact-scale hourly
+    * collapse runs once per query regardless of branch count.
     */
   private def hourlyCents(s: SparkSession, d: String) = {
     import s.implicits._
-    Tables.events(s, d)
+    Share(Tables.events(s, d)
       .select($"event_type", expr(Det.fdivExpr("ms", "3600000")).as("h"),
         round($"value" * 100).cast("long").as("c"))
-      .groupBy("event_type", "h").agg(sum($"c").as("v"))
-      .localCheckpoint(true)
+      .groupBy("event_type", "h").agg(sum($"c").as("v")))
   }
 
   private val hourlyCtes: String =

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.core.{Det, OSql, Q, Tables}
+import graft.core.{Cut, Det, OSql, Q, Share, Tables}
 
 /** Window-function surface (SURVEY.md §2.2). All event-time windows
   * order by epoch-milliseconds (unix_millis / epoch_ms) rather than raw
@@ -35,16 +35,11 @@ object Windows {
     * driver-side scan in PropertySpec.
     */
   private[graft] def prefixOffsets(cnts: DataFrame, pidCol: String): DataFrame = {
-    // The ≤P-row count ledger feeds BOTH sides of the theta-join, and
-    // left lazy each side re-derives it — one extra full pass over the
-    // caller's (usually corpus-sized) ranked input per rank, at every
-    // one of the ~25 two-phase call sites. Checkpoint the ledger once
-    // (bounded by the partition/bucket count) unless the caller already
-    // handed us a materialized one (r16, guide §2.4).
-    val c = cnts.queryExecution.logical match {
-      case _: org.apache.spark.sql.execution.LogicalRDD => cnts
-      case _ => cnts.localCheckpoint(true)
-    }
+    // The ≤P-row count ledger feeds BOTH sides of the theta-join:
+    // shared, so the pass over the caller's (usually corpus-sized)
+    // input runs once. Callers hand in counts that are a deterministic
+    // function of their input (a cut rank table or keyed buckets).
+    val c = Share(cnts)
     c.as("a").join(
         broadcast(c.as("b")),
         col(s"b.$pidCol") < col(s"a.$pidCol"), "left_outer")
@@ -60,7 +55,7 @@ object Windows {
     * row number — from `monotonically_increasing_id`'s (partition ≪ 33
     * | offset) layout, so the LOCAL rank is pure arithmetic with no
     * window at all. Callers add [[prefixOffsets]] over the per-pid
-    * counts for the global offset, and checkpoint when both phases
+    * counts for the global offset, and [[Cut]] the result: both phases
     * must observe ONE sampled range partitioning.
     */
   private[graft] def rankIds(df: DataFrame, sortCols: Column*): DataFrame =
@@ -127,10 +122,9 @@ object Windows {
     (s, d) => {
       import s.implicits._
       // phase 1: range-shuffle to global order; (pid, lrn) from the id
-      val ids = rankIds(
+      val ids = Cut(rankIds(
         t(s, d, "supplier").select($"s_suppkey", $"s_acctbal"),
-        $"s_acctbal".desc, $"s_suppkey".asc)
-        .localCheckpoint(true)
+        $"s_acctbal".desc, $"s_suppkey".asc), "rank-ids", s"$d/supplier.parquet")
       // phase 2: P-row exclusive prefix sums → per-partition offsets
       // (broadcast theta-join, no WindowExec — see [[prefixOffsets]])
       val offs = prefixOffsets(
@@ -143,9 +137,9 @@ object Windows {
       val vt = rn.groupBy($"s_acctbal".as("v")).agg(min($"rn").as("vrnk"))
       // dense_rank = the VALUE's row_number in value order — the same
       // two-phase spelling over the ≤N-row value table
-      val vids = rankIds(vt, $"v".desc)
-        .withColumnRenamed("pid", "pid2").withColumnRenamed("lrn", "lv")
-        .localCheckpoint(true)
+      val vids = Cut(rankIds(vt, $"v".desc)
+        .withColumnRenamed("pid", "pid2").withColumnRenamed("lrn", "lv"),
+        "rank-vids", s"$d/supplier.parquet")
       val offs2 = prefixOffsets(
         vids.groupBy("pid2").agg(count(lit(1)).as("n")), "pid2")
       val vt2 = vids.join(broadcast(offs2), "pid2")
@@ -285,11 +279,10 @@ object Windows {
       // FLOOR-aligned day (pmod spelling), matching the oracle's `//`
       // floor division — a bare `div` truncates toward zero and would
       // shift pre-epoch (negative-ms) events onto the wrong day
-      val daily = graft.core.Mat(s, Tables.events(s, d)
+      val daily = Share(Tables.events(s, d)
         .groupBy(expr("(ms - pmod(ms, 86400000)) div 86400000")
           .cast("long").as("day"))
-        .agg(sum($"value".cast(Dec)).as("v")),
-        "mavg-daily")
+        .agg(sum($"value".cast(Dec)).as("v")))
       // the NULL-day ledger row (NULL ts) must survive the rewrite: a
       // bare theta predicate is NULL-valued for it and the inner join
       // would drop it, while the oracle's RANGE window still emits the
@@ -329,10 +322,9 @@ object Windows {
       // (grouping peers by s_acctbal alone would diverge from the
       // oracle's suppkey-tiebroken window on tied balances). No global
       // WindowExec even on the dimension table.
-      val ids = rankIds(
+      val ids = Cut(rankIds(
         t(s, d, "supplier").select($"s_suppkey", $"s_acctbal"),
-        $"s_acctbal".desc, $"s_suppkey".asc)
-        .localCheckpoint(true)
+        $"s_acctbal".desc, $"s_suppkey".asc), "rank-ids", s"$d/supplier.parquet")
       val offs = prefixOffsets(
         ids.groupBy("pid").agg(count(lit(1)).as("n")), "pid")
       val tot = ids.agg(count(lit(1)).as("nn"))

@@ -30,6 +30,19 @@ class PlanSpec extends SparkSpec {
       case other => other.children.flatMap(scansOf)
     }
 
+  /** Every node of an executed plan, unwrapping the adaptive root and
+    * query stages; a ReusedExchange is listed but not descended into,
+    * so a reused subtree counts once.
+    */
+  private def planNodes(p: org.apache.spark.sql.execution.SparkPlan)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] = p match {
+    case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+      planNodes(a.executedPlan)
+    case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => planNodes(q.plan)
+    case r: org.apache.spark.sql.execution.exchange.ReusedExchangeExec => Seq(r)
+    case other => other +: other.children.flatMap(planNodes)
+  }
+
   test("scan_pruned_filter pushes predicates and prunes columns at the parquet scan") {
     val plan = executedPlan("scan_pruned_filter")
     assert(plan.contains("PushedFilters: [IsNotNull(l_shipdate)"),
@@ -709,28 +722,32 @@ class PlanSpec extends SparkSpec {
   }
 
   test("Kneser-Ney bigram windows partition by doc_id — never a global token order") {
-    // r16: the bigram ledger is checkpointed, so the lead window runs
-    // inside the materialization job and the FINAL plan consumes the
-    // ExistingRDD ledger. The global-order pin therefore has two parts:
-    // the final plan must feed from the materialized ledger and carry
-    // no window at all, and the ledger-producing fragment (the same
-    // `bigramLedger` the query checkpoints) must partition its lead
-    // window by doc_id.
-    val plan = executedPlan("text_bigram_kneser_ney")
-    assert(plan.contains("Scan ExistingRDD"),
-      "scoring must consume the materialized bigram ledger")
-    assert(!plan.linesIterator.exists(l =>
-      l.contains("Window ") && l.contains("lead(")),
-      "the token lead window must live in the ledger job, not re-run " +
-        "over the final plan (the remaining windows are the per-lang " +
-        "top-10 rank, keyed by lang)")
-    val ledgerPlan = graft.ops.CorpusOps
-      .bigramLedger(spark.read.parquet(s"$sf/documents.parquet"))
-      .queryExecution.executedPlan.toString
-    val leadWindows = ledgerPlan.linesIterator
+    // The bigram ledger is shared (graft.core.Share): its four readers
+    // (ctx, cont, bt, the scored join) plan the same subtree, so the
+    // ledger's (lang, w1, w2) exchange runs once and the other three
+    // branches read it as a ReusedExchange — the tokenize + lead window
+    // never re-runs per branch.
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
+    val df = run("text_bigram_kneser_ney")
+    df.collect()
+    val all = planNodes(df.queryExecution.executedPlan)
+    val leadWindows = df.queryExecution.executedPlan.toString.linesIterator
       .filter(l => l.contains("Window ") && l.contains("lead(")).toSeq
     assert(leadWindows.nonEmpty && leadWindows.forall(_.contains("[doc_id")),
       s"the bigram lead window must partition by doc_id: $leadWindows")
+    def isLedger(e: ShuffleExchangeExec) = e.outputPartitioning match {
+      case h: HashPartitioning =>
+        h.expressions.map(_.toString.takeWhile(_ != '#')) == Seq("lang", "w1", "w2")
+      case _ => false
+    }
+    val ledger = all.collect { case e: ShuffleExchangeExec if isLedger(e) => e }
+    assert(ledger.size === 1, s"the ledger's exchange must appear once: $ledger")
+    val reused = all.collect {
+      case r @ ReusedExchangeExec(_, e: ShuffleExchangeExec) if isLedger(e) => r
+    }
+    assert(reused.size === 3,
+      s"ctx, cont and bt must each read the ledger as a ReusedExchange: $reused")
   }
 
   test("seeded PPR iterates via equi-joins and partial+final aggs — no product") {
@@ -826,17 +843,38 @@ class PlanSpec extends SparkSpec {
       "the overlap predicate must prune via the grid, not a product")
   }
 
-  test("centroid drift reads the Mat'd source ledger — one corpus pass only") {
-    val plan = executedPlan("embedding_centroid_drift")
-    // Mat materializes the (source, pos) ledger to scratch parquet when
-    // the query is built; the final plan's leaves are ledger scans —
-    // the corpus (components + documents) is never read again for the
-    // global centroid, the norms, or the vector counts
-    assert(plan.contains("centroid-led"),
-      "every leaf must scan the Mat'd ledger")
-    assert(!plan.contains("documents.parquet") &&
-      !plan.contains("embeddings.parquet") && !plan.contains("posexplode"),
-      "the corpus pass must happen once, inside the ledger build")
+  test("centroid drift reads the shared source ledger — one corpus pass only") {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
+    val df = run("embedding_centroid_drift")
+    df.collect()
+    val plan = df.queryExecution.executedPlan.toString
+    // the (source, pos) ledger is shared (graft.core.Share): its exchange
+    // runs once and the global centroid, the norms and the vector counts
+    // read it as ReusedExchanges — the corpus (components + documents)
+    // is never read again
+    val all = planNodes(df.queryExecution.executedPlan)
+    def isLedger(e: ShuffleExchangeExec) = e.outputPartitioning match {
+      case h: HashPartitioning =>
+        h.expressions.map(_.toString.takeWhile(_ != '#')) == Seq("source", "pos")
+      case _ => false
+    }
+    assert(all.count { case e: ShuffleExchangeExec => isLedger(e); case _ => false } === 1,
+      "the ledger must be built once")
+    assert(all.count {
+      case ReusedExchangeExec(_, e: ShuffleExchangeExec) => isLedger(e)
+      case _ => false
+    } === 3, "every other reader must read the ledger as a ReusedExchange")
+    // each input is scanned at most once (a broadcast of the documents
+    // may itself arrive as a reused stage)
+    val scans = all.collect { case s: FileSourceScanExec =>
+      s.relation.location.rootPaths.mkString(",") }
+    assert(scans.nonEmpty && scans.distinct.size === scans.size &&
+      scans.count(_.contains("documents.parquet")) <= 1,
+      s"the corpus pass must happen once, inside the ledger build: $scans")
+    assert(!plan.contains("embeddings.parquet") && !plan.contains("posexplode"),
+      "the components come from the quantized-components artifact")
   }
 
   test("kruskal-wallis ranks two-phase: every window keyed by the coarse bucket") {

@@ -13,6 +13,9 @@ import org.scalacheck.Prop.propBoolean
 class PropertySpec extends SparkSpec {
   import spark.implicits._
 
+  /** The archive a component search's cuts are size-gated on. */
+  private val docs = s"$sf/documents.parquet"
+
   private def check(p: Prop, min: Int = 100): Unit = {
     val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(min), p)
     assert(res.passed, res.status.toString)
@@ -307,7 +310,7 @@ class PropertySpec extends SparkSpec {
     check(Prop.forAll(Gen.nonEmptyListOf(edgeGen)) { pairs =>
       val uniq = pairs.distinct
       val sym = uniq.flatMap { case (a, b) => Seq((a, b), (b, a)) }
-      val got = graft.ops.LlmPipeline.starContraction(spark, sym.toDF("v", "u"))
+      val got = graft.ops.LlmPipeline.starContraction(spark, sym.toDF("v", "u"), docs)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       got == unionFind(uniq)
     }, min = 10)
@@ -319,7 +322,7 @@ class PropertySpec extends SparkSpec {
     // produce the exact component minimum, not fail or split the chain
     val pairs = (0L until 39L).map(i => (i, i + 1))
     val sym = pairs.flatMap { case (a, b) => Seq((a, b), (b, a)) }
-    val cc = graft.ops.LlmPipeline.connectedComponents(spark, sym.toDF("v", "u"))
+    val cc = graft.ops.LlmPipeline.connectedComponents(spark, sym.toDF("v", "u"), docs)
     val labels = cc.labels.collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(labels.length === 40)
     assert(labels.forall(_._2 == 0L), "every chain vertex joins component 0")
@@ -339,7 +342,7 @@ class PropertySpec extends SparkSpec {
     for (d <- Seq(64, 256)) {
       val pairs = (0L until d.toLong).map(i => (i, i + 1))
       val sym = pairs.flatMap { case (a, b) => Seq((a, b), (b, a)) }
-      val cc = graft.ops.LlmPipeline.connectedComponents(spark, sym.toDF("v", "u"))
+      val cc = graft.ops.LlmPipeline.connectedComponents(spark, sym.toDF("v", "u"), docs)
       val labels = cc.labels.collect().map(r => (r.getLong(0), r.getLong(1)))
       assert(labels.length === d + 1)
       assert(labels.forall(_._2 == 0L), s"chain of diameter $d joins component 0")
@@ -357,7 +360,7 @@ class PropertySpec extends SparkSpec {
     }
     val symStars = stars.flatMap { case (a, b) => Seq((a, b), (b, a)) }
     val starCc = graft.ops.LlmPipeline
-      .connectedComponents(spark, symStars.toDF("v", "u"))
+      .connectedComponents(spark, symStars.toDF("v", "u"), docs)
     val starLabels = starCc.labels.collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(starLabels.length === 240)
     assert(starLabels.forall { case (v, l) => l == (v / 100) * 100 })
